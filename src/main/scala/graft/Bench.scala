@@ -37,11 +37,8 @@ object Bench {
       // suite net 1.015 (neutral) while consistently costing the CPU-
       // dense mid-size shuffles 1.2-1.3x (q_pagerank 1.28, q_containment
       // 1.27) — bytes under-estimate CPU, which is why parallelism-first
-      // is Spark's default. Reverted to the Spark default; the env knob
-      // stays so the floor remains A/B-able in the same harness (the
-      // driver never sets it).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "1m"))
+      // is Spark's default. Reverted: the session keeps Spark's default
+      // 1 MB floor.
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

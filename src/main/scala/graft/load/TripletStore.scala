@@ -69,14 +69,14 @@ import graft.operators.Checkpoints
   * Levels below `bucketMinRows` write UNBUCKETED — a small level is
   * cheaper to scan whole than to fan out 64 ways, and the pruning win
   * lives in the lake-sized levels (the compacted base above all) — and
-  * pre-bucket stores migrate in place: unbucketed levels read in full
-  * (correct, unpruned) until the next compaction rebuckets the base.
+  * unbucketed levels read in full (correct, unpruned) until a
+  * compaction folds them into a lake-sized, bucketed base.
   * The read side spans the base plus the deltas
   * since the last compaction, bounded by the AUTOMATIC compaction
   * cadence: after a merge pushes the live level count (base + deltas)
   * past `autoCompactEvery`, the merge itself compacts down to
-  * `autoCompactKeep` retained versions — the StoreScaleProbe's measured
-  * 1-4 level cycle with flat merge wall time becomes the default
+  * `autoCompactKeep` retained versions — the measured 1-4 level cycle
+  * with flat merge wall time (SCALE.md § Triple store) becomes the default
   * operating mode instead of a caller's chore (`autoCompactEvery = 0`
   * disables it for callers managing their own cadence). Base and delta
   * files are SUBJECT-clustered ([[graft.sinks.Sinks.writeClustered]]
@@ -136,16 +136,13 @@ class TripletStore(spark: SparkSession, path: String,
   // No session conf is touched (r13 raised
   // `spark.sql.parquet.pushdown.inFilterThreshold` session-wide to keep
   // large Ins from "collapsing to a min..max range"): the r14
-  // in-pushdown probe (tools/in_pushdown_r14.txt, graft.InPushProbe)
-  // measured Spark 4.1's ABOVE-threshold In path and found it is NOT a
-  // range collapse — it prunes row groups by the value set against
-  // footer stats and subject bloom filters, at ANY literal count, with
-  // none of the or-tree's recursion cliff (task StackOverflowError in
-  // (1024, 1536], tools/pushdown_cliff_r14.txt) and a fraction of its
-  // planning cost. Leaving the threshold at its default routes every
-  // >10-literal subject predicate through that path; the one regression
-  // is scattered point-sets over LEGACY (pre-bloom) levels, which prune
-  // ~2x less tightly until the next compaction rewrites them bloomed.
+  // in-pushdown matrix (SCALE.md § Triple store) measured Spark 4.1's
+  // ABOVE-threshold In path and found it is NOT a range collapse — it
+  // prunes row groups by the value set against footer stats and subject
+  // bloom filters, at ANY literal count, with none of the or-tree's
+  // recursion cliff (task StackOverflowError in (1024, 1536]) and a
+  // fraction of its planning cost. Leaving the threshold at its default
+  // routes every >10-literal subject predicate through that path.
 
   /** Atomic marker publication (temp sibling + ATOMIC_MOVE): a plain
     * truncate-in-place write races a concurrent reader into observing
@@ -229,18 +226,6 @@ class TripletStore(spark: SparkSession, path: String,
     out.get
   }
 
-  /** The store's pinned bucket count: the recorded marker when present
-    * (any bucketed level was ever written), else the constructor seed —
-    * or the default floor under auto-sizing (`subjectBuckets = 0`). The
-    * pre-pin value only feeds bucket-id computations against a store
-    * with NO bucketed levels, where pruning is a no-op regardless. */
-  private def bucketN: Int = {
-    val m = new java.io.File(fs, BucketMarker)
-    if (m.exists()) readMarkerInt(m)
-    else if (subjectBuckets > 0) subjectBuckets
-    else DefaultSubjectBuckets
-  }
-
   /** Pin the store's bucket count at the FIRST bucketed commit and
     * return the PINNED value (which may be a concurrent winner's, not
     * this writer's candidate). The marker must exist before any `sbkt=`
@@ -281,74 +266,27 @@ class TripletStore(spark: SparkSession, path: String,
       DefaultSubjectBuckets.toLong, rows / targetRowsPerFile)).toInt
 
   /** The new bucket count a compaction should re-pin — Some only when
-    * the pass is the safe re-pin moment: the store auto-sizes (an
-    * explicit `subjectBuckets` is the caller's contract to keep), the
-    * base being materialized is lake-sized and derives at least TWICE
-    * the recorded N (hysteresis: never shrink, never churn the marker
-    * for marginal growth), and every level SURVIVING the pass is
-    * either unbucketed or self-describes its own modulus
-    * ([[TripletStore.LevelBucketMarker]]) — a surviving legacy level
-    * reads the store marker as its modulus fallback, so moving the
-    * marker under it would silently mis-prune; such levels block the
-    * re-pin until a pass rewrites them. Since r15 that rewrite happens
-    * IN the same pass ([[rewriteLegacyIn]] runs before this check), so
-    * the guard is defense-in-depth rather than a multi-cycle wait.
-    * Compaction is the natural re-pin
-    * moment: it is single-owner (the claim), rewrites the base anyway,
-    * and once the old levels drop no reader depends on the old modulus
-    * — the new base self-describes the new N from its first commit,
-    * and the marker itself moves only AFTER the deletion phase.
-    *
-    * MIXED-BINARY FLEETS: the survivor check is a point-in-time
-    * snapshot. A pre-r14 writer binary (one that buckets without
-    * self-describing) committing a delta BETWEEN this check and the
-    * marker move would read the NEW store marker as that level's
-    * modulus fallback and silently mis-prune. Same-version writers
-    * always self-describe, so the contract is operational: upgrade
-    * every writer before the first compaction of an upgraded store —
-    * a pre-self-description binary must not write to a store whose
-    * marker has re-pinned. */
-  private def repinCandidate(rows: Long, survivors: Seq[String]): Option[Int] = {
+    * the store auto-sizes (an explicit `subjectBuckets` is the caller's
+    * contract to keep), the base being materialized is lake-sized, and
+    * it derives at least TWICE the recorded N (hysteresis: never shrink,
+    * never churn the marker for marginal growth). Compaction is the
+    * natural re-pin moment: it is single-owner (the claim) and rewrites
+    * the base anyway. Every bucketed level self-describes its own
+    * modulus ([[TripletStore.LevelBucketMarker]]), so levels surviving
+    * the pass keep reading their old N beside the new base. */
+  private def repinCandidate(rows: Long): Option[Int] = {
     val m = new java.io.File(fs, BucketMarker)
     if (subjectBuckets != 0 || rows < bucketMinRows || !m.exists()) None
     else {
-      val recorded = readMarkerInt(m)
       val candidate = autoBucketN(rows)
-      val safe = survivors.forall(n => !isBucketed(n) || levelSelfDescribed(n))
-      if (candidate >= 2L * recorded && safe) Some(candidate) else None
+      if (candidate >= 2L * readMarkerInt(m)) Some(candidate) else None
     }
   }
 
-  /** The level dirs a compaction at `cut` leaves standing above its
-    * base (the still-delta-queryable retained versions), each resolved
-    * through [[pick]] to its rewritten generation when one committed. */
-  private def survivorsAbove(cut: Int): Seq[String] =
-    (deltaVersions.filter(_ > cut).map(d => s"v=$d") ++
-      baseVersions.filter(_ > cut).map(b => s"base=$b")).map(pick)
-
-  /** Whether `dirName` is a COMMITTED dir under this store (rename
-    * protocol: `_SUCCESS` travels with the atomic rename). */
-  private def committedDir(dirName: String): Boolean =
-    new java.io.File(new java.io.File(fs, dirName), "_SUCCESS").exists()
-
-  /** Resolve a level name to its REWRITTEN generation (`r` + name) when
-    * one has committed — the read-side half of [[rewriteLegacyLevels]].
-    * A legacy level is never swapped in place (a reader listing during
-    * a swap window would silently reconstruct WITHOUT the level — a
-    * wrong answer, not a loud failure): the rewrite commits additively
-    * as a sibling `rv=N` / `rbase=N`, readers prefer it from the moment
-    * its `_SUCCESS` lands, and the original stays standing — masked for
-    * reads, still guarding its version slot against straggler renames —
-    * until the version itself drops out of the retention window. */
-  private def pick(dirName: String): String = {
-    val r = "r" + dirName
-    if (committedDir(r)) r else dirName
-  }
-
   /** A level dir written under the bucketed layout carries `sbkt=`
-    * partition children; a pre-bucket, sub-threshold, or empty dir does
-    * not. Per-dir self-description is what lets one store hold both
-    * layouts side by side — permanently, not just mid-migration. */
+    * partition children; a sub-threshold or empty dir does not. Per-dir
+    * self-description is what lets one store hold both layouts side by
+    * side. */
   private def isBucketed(dirName: String): Boolean =
     Option(new java.io.File(fs, dirName).listFiles())
       .exists(_.exists(f => f.isDirectory &&
@@ -374,10 +312,7 @@ class TripletStore(spark: SparkSession, path: String,
     * levels written under different Ns (compaction re-pins, see
     * [[compact(keep:Int)*]]) coexist correctly. `forceN` buckets by an
     * explicit count instead of the pinned marker — the re-pin path,
-    * where the new N must land with the base BEFORE the store marker
-    * moves (legacy non-self-described levels read the store marker as
-    * fallback and must keep reading their old N until they are
-    * deleted). */
+    * where the new N lands with the base before the store marker moves. */
   private def commitLevel(level: DataFrame, rows: Long, tmpTag: String,
                           dirName: String, forceN: Option[Int] = None): Unit = {
     val tmp = AtomicDirCommit.tmpFor(fs, tmpTag)
@@ -385,8 +320,8 @@ class TripletStore(spark: SparkSession, path: String,
     // prune by subject RANGE; the bloom prunes by subject SET — the
     // difference is row groups whose min..max happens to span a probed
     // subject that is not actually present (most row groups of a
-    // touched bucket under a hash-scattered probe set: measured 2x in
-    // tools/in_pushdown_r14.txt). Read-side use is parquet's default
+    // touched bucket under a hash-scattered probe set: measured 2x, see
+    // SCALE.md § Triple store). Read-side use is parquet's default
     // row-group filtering — no reader conf needed. Gated on the SAME
     // lake-size floor as bucketing: a sub-threshold level is one or two
     // row groups that any matching read loads anyway, so a bloom there
@@ -412,18 +347,21 @@ class TripletStore(spark: SparkSession, path: String,
   }
 
   /** The modulus a bucketed level's `sbkt` ids were computed with: its
-    * own [[TripletStore.LevelBucketMarker]] when present; the store
-    * marker (which cannot have moved while any such level survives —
-    * [[repinCandidate]] refuses) for levels written before
-    * self-description. */
+    * own [[TripletStore.LevelBucketMarker]], committed with the level.
+    * A bucketed level without one predates per-level self-description;
+    * guessing its modulus from the store marker could silently mis-prune
+    * live rows, so the read refuses instead.
+    *
+    * @throws IllegalStateException the level carries no modulus marker */
   private def levelModulus(dirName: String): Int = {
     val m = new java.io.File(new java.io.File(fs, dirName), LevelBucketMarker)
-    if (m.exists()) readMarkerInt(m)
-    else bucketN
+    if (!m.exists())
+      throw new IllegalStateException(
+        s"bucketed level $path/$dirName carries no $LevelBucketMarker: the " +
+          "store predates per-level self-description of the bucket " +
+          "modulus; replay its batches into a fresh store")
+    readMarkerInt(m)
   }
-
-  private def levelSelfDescribed(dirName: String): Boolean =
-    new java.io.File(new java.io.File(fs, dirName), LevelBucketMarker).exists()
 
   /** Only COMMITTED snapshots are visible (shared `_SUCCESS` gating —
     * see CommittedDirs); additionally, a non-empty store must carry the
@@ -482,20 +420,19 @@ class TripletStore(spark: SparkSession, path: String,
     * `bucketsFor`, when given, restricts each BUCKETED level to the
     * touched `sbkt` partitions — a planning-time PartitionFilter, so the
     * scan reads only the touched partition dirs' files, not all live
-    * rows (PlanSpec pins the filter; StoreScaleProbe pins flat
-    * files-read under a 10× untouched-store growth). It is a FUNCTION
-    * of the level's modulus, evaluated per level against that level's
-    * self-described N ([[levelModulus]]): after a compaction re-pin,
-    * retained old-N deltas and the new-N base each get their own
-    * correct filter. Pre-bucket levels carry no
-    * partition column and are read in full (correct, unpruned — they
-    * disappear at the next compaction). Visible to the plan/scale specs. */
+    * rows (PlanSpec pins the filter; SCALE.md § Triple store records
+    * flat files-read under a 10× untouched-store growth). It is a
+    * FUNCTION of the level's modulus, evaluated per level against that
+    * level's self-described N ([[levelModulus]]): after a compaction
+    * re-pin, retained old-N deltas and the new-N base each get their own
+    * correct filter. Unbucketed levels carry no partition column and are
+    * read in full (correct, unpruned — they are small by construction).
+    * Visible to the plan/scale specs. */
   private[graft] def levelsAt(v: Int,
                               bucketsFor: Option[Int => Seq[Int]] = None): Option[DataFrame] = {
     val floor = baseVersions.filter(_ <= v).lastOption
     val deltas = deltaVersions.filter(d => d > floor.getOrElse(-1) && d <= v)
-    val names = (floor.map(b => s"base=$b").toSeq ++
-      deltas.map(d => s"v=$d")).map(pick)
+    val names = floor.map(b => s"base=$b").toSeq ++ deltas.map(d => s"v=$d")
     if (names.isEmpty) None
     else {
       val (bucketed, plain) = names.partition(isBucketed)
@@ -564,17 +501,17 @@ class TripletStore(spark: SparkSession, path: String,
             // pushes any above-threshold In through its native set path —
             // per-row-group pruning against footer stats AND the subject
             // bloom filters commitLevel writes, with no or-tree recursion
-            // cliff and no range collapse (measured:
-            // tools/in_pushdown_r14.txt). Row-level evaluation is a
-            // hash-set InSet. The former 1k..10k "dead zone" (r13 capped
-            // the pushed or-tree at 1024) does not exist on this path.
+            // cliff and no range collapse (measured: SCALE.md § Triple
+            // store). Row-level evaluation is a hash-set InSet. The
+            // former 1k..10k "dead zone" (r13 capped the pushed or-tree
+            // at 1024) does not exist on this path.
             //
             // Defense for deployment-RAISED thresholds: an In at or
             // below the session inFilterThreshold pushes as an
             // or-of-equals whose evaluation recursion StackOverflows
-            // past the measured cliff (1024 safe, 1536 task-fatal —
-            // tools/pushdown_cliff_r14.txt). At the default threshold
-            // (10) no list here can form one; if the session raised the
+            // past the measured cliff (1024 safe, 1536 task-fatal). At
+            // the default threshold (10) no list here can form one; if
+            // the session raised the
             // threshold past [[TripletStore.OrTreeSafeLiterals]] (a
             // common tuning knob), a mid-size list would — so split it
             // into [[TripletStore.OrTreeChunkLiterals]]-sized In chunks
@@ -1307,76 +1244,11 @@ class TripletStore(spark: SparkSession, path: String,
     }
   }
 
-  /** Rewrite each LEGACY level among `names` — bucketed but not
-    * self-described (pre-r14 layout: no [[TripletStore.LevelBucketMarker]]
-    * and no per-row-group subject bloom filters) — as a committed
-    * sibling `r<name>` carrying identical rows under the SAME modulus
-    * (the store marker, which cannot have moved while the legacy level
-    * stands — [[repinCandidate]] refuses) plus the modern trimmings:
-    * self-described modulus, subject blooms, subject-sorted files.
-    * Readers prefer the rewritten generation via [[pick]] the moment it
-    * commits; the original stays standing as the version-slot guard
-    * (see [[pick]] for why an in-place swap is unacceptable) and both
-    * are swept when the version drops. Caller must hold the compaction
-    * claim: commits are additive and atomic, but two uncoordinated
-    * rewriters would duplicate lake-sized writes. A commit lost to a
-    * racing owner (split-brain during a takeover) is ignored — the
-    * winner's content is identical by construction. Returns the names
-    * this call rewrote. */
-  private def rewriteLegacyIn(names: Seq[String]): Seq[String] =
-    names.filter(n => !n.startsWith("r") &&
-        isBucketed(n) && !levelSelfDescribed(n))
-      .filter { n =>
-        val rn = "r" + n
-        if (committedDir(rn)) false
-        else {
-          val level = spark.read.schema(bucketedPhysSchema)
-            .parquet(s"$path/$n").drop(BucketCol)
-          val rows = level.count()
-          try {
-            commitLevel(level, rows, rn.replace("=", ""), rn,
-              forceN = Some(levelModulus(n)))
-            true
-          } catch {
-            case _: java.util.ConcurrentModificationException =>
-              committedDir(rn) // a racing owner landed the identical rewrite
-          }
-        }
-      }
-      .map("r" + _)
-
-  /** Maintenance verb: rewrite every LIVE legacy level (see
-    * [[rewriteLegacyIn]]) under the single-owner compaction claim, in
-    * ONE pass — without waiting for a compaction whose cut happens to
-    * absorb them. Why a dedicated verb: a store upgraded in place keeps
-    * its pre-r14 levels until a compaction folds them, and while they
-    * survive they prune ~2x looser on scattered point-sets (no subject
-    * blooms — tools/in_pushdown_r14.txt) and BLOCK the bucket re-pin
-    * ([[repinCandidate]]); the reference's hash indexes
-    * (`data/configuration/hf/load/sql_files/init.sql:28-38`) apply to
-    * all rows from creation, and so should this store's pruning
-    * machinery. Compaction also runs this on its survivors
-    * ([[compactOwned]]), so a routine compaction cadence self-heals; the
-    * verb exists for stores that want the read path modernized NOW.
-    * Returns the rewritten dir names. */
-  def rewriteLegacyLevels(): Seq[String] = {
-    val owner = claimCompaction()
-    val hb = startCompactionHeartbeat(owner)
-    try {
-      val floor = baseVersions.lastOption
-      val live = floor.map(b => s"base=$b").toSeq ++
-        deltaVersions.filter(_ > floor.getOrElse(-1)).map(d => s"v=$d")
-      val out = rewriteLegacyIn(live)
-      AtomicDirCommit.sweepTmp(fs, TmpSweepAgeMs)
-      out
-    } finally { hb.interrupt(); releaseCompaction(owner) }
-  }
-
   /** Replicate this store's COMMITTED state into `dst` (an empty or
     * absent directory) through the SAME commit protocol the store's own
     * writers use, instead of a raw recursive tree copy: only committed
-    * level dirs travel (`v=`/`base=` and their rewritten `rv=`/`rbase=`
-    * generations — `_SUCCESS`-gated), each landing in the replica via a
+    * level dirs travel (`v=`/`base=`, `_SUCCESS`-gated), each landing in
+    * the replica via a
     * `.tmp-` sibling plus ONE atomic rename ([[AtomicDirCommit]]), and
     * only the durable store markers travel (format, bucket count,
     * retention horizon) — never a claim marker (`_COMPACTING` and its
@@ -1403,7 +1275,6 @@ class TripletStore(spark: SparkSession, path: String,
       }
     }
     (deltaVersions.map(d => s"v=$d") ++ baseVersions.map(b => s"base=$b"))
-      .flatMap(n => Seq(n, "r" + n)).filter(committedDir)
       .foreach { n =>
         val tmp = AtomicDirCommit.tmpFor(dst, n.replace("=", ""))
         Scratch.copyDir(new java.io.File(fs, n), tmp)
@@ -1436,17 +1307,6 @@ class TripletStore(spark: SparkSession, path: String,
     // (the return value is a version list, not a plan over `snap`)
     else Checkpoints.scoped {
       val cut = vs.takeRight(math.max(1, keep)).head
-      // Surviving legacy levels rewrite FIRST, inside the already-held
-      // claim (they are being listed anyway): additive atomic commits,
-      // after which every survivor self-describes — so the re-pin check
-      // below passes in THIS pass instead of waiting for a later cut to
-      // absorb the legacy dirs, and the read path reaches bloomed scan
-      // counts after one maintenance pass. The retry arm (base=cut
-      // already committed by a crashed prior pass) includes the base
-      // itself: a pre-r14 base is as legacy as any delta.
-      rewriteLegacyIn(
-        (if (baseVersions.contains(cut)) Seq(pick(s"base=$cut")) else Nil) ++
-          survivorsAbove(cut))
       // Retry safety: a prior compaction that crashed after committing
       // base=cut but before its deletions must NOT rewrite the base —
       // reconstruct(cut) would then read the very path being overwritten
@@ -1461,13 +1321,14 @@ class TripletStore(spark: SparkSession, path: String,
         // of interleaving Overwrite writes into one torn-but-committed
         // base (the pre-protocol shape BatchedSignatureStore fixed).
         // A lake-sized base gets the bucket partition column here — the
-        // one-shot rebucket path for pre-bucket stores. When the base
+        // one-shot rebucket path for stores of sub-threshold levels.
+        // When the base
         // outgrew the recorded bucket count, THIS is the re-pin moment
         // (single-owner, rewrites the base anyway): the base buckets by
         // the re-derived N, self-described; the store marker moves only
         // after the old levels drop ([[repinCandidate]]).
         val rows = snap.count()
-        repin = repinCandidate(rows, survivorsAbove(cut))
+        repin = repinCandidate(rows)
         commitLevel(snap, rows, s"base$cut", s"base=$cut", forceN = repin)
       }
       // deletion phase gate: the base build above may have outlived even
@@ -1484,18 +1345,15 @@ class TripletStore(spark: SparkSession, path: String,
       // (lost update) instead of colliding loudly. Exactly the shape
       // compact(olderThan)'s claim protocol keeps closed; the kept dir is
       // swept by the NEXT compaction once cut itself is superseded.
-      // rewritten generations (`rv=`/`rbase=`) sweep with their versions
-      dropped.flatMap(d => Seq(s"v=$d", s"base=$d", s"rv=$d", s"rbase=$d"))
+      dropped.flatMap(d => Seq(s"v=$d", s"base=$d"))
         .foreach { nm =>
           val d = new java.io.File(fs, nm)
           if (d.exists()) Scratch.rm(d)
         }
-      // the store marker moves LAST: legacy (pre-self-description)
-      // levels read it as their modulus fallback, so it must keep the
-      // old N until every level that depends on it is deleted above.
-      // A crash before this publish is benign — all surviving levels
-      // self-describe, later deltas bucket by the old N (correct, just
-      // coarser) and the next compaction re-derives again.
+      // the store marker moves LAST. A crash before this publish is
+      // benign — every level self-describes, later deltas bucket by the
+      // old N (correct, just coarser) and the next compaction re-derives
+      // again.
       repin.foreach(n => publishMarker(BucketMarker, n.toString))
       AtomicDirCommit.sweepTmp(fs, TmpSweepAgeMs)
       dropped
@@ -1594,7 +1452,7 @@ class TripletStore(spark: SparkSession, path: String,
       // retention is a keep-everything-in-one-base pass, so it is a
       // re-pin moment exactly like compact(keep)'s — same guards, same
       // marker-moves-last ordering
-      val repin = repinCandidate(rows, survivorsAbove(nv))
+      val repin = repinCandidate(rows)
       commitLevel(snap, rows, s"base$nv", s"base=$nv", forceN = repin)
       // deletion phase gate — same rationale as compactOwned's: never
       // delete under a takeover owner's build
@@ -1607,7 +1465,7 @@ class TripletStore(spark: SparkSession, path: String,
       // its base (levelsAt ignores deltas at or below a base) and keeps
       // such a straggler colliding loudly.
       versions.filter(_ < nv)
-        .flatMap(d => Seq(s"v=$d", s"base=$d", s"rv=$d", s"rbase=$d"))
+        .flatMap(d => Seq(s"v=$d", s"base=$d"))
         .foreach { nm =>
           val d = new java.io.File(fs, nm)
           if (d.exists()) Scratch.rm(d)
@@ -1640,18 +1498,16 @@ object TripletStore {
     * layout changes): 2 = identity-hash fix, 3 = delta (merge-on-read)
     * layout. The subject-bucket partition column added to format-3 levels
     * is NOT a generation bump: each level dir self-describes (bucketed
-    * dirs carry `sbkt=` children), readers handle both layouts side by
-    * side, and pruning simply skips unbucketed levels — a pre-bucket
-    * store migrates in place (new deltas bucketed; the next compaction
-    * rebuckets the base). The same holds for the r13 subject-first file
-    * sort: file ORDER is not a format property — levels written under
-    * the older identity-hash sort stay readable and correct, they just
-    * yield no within-bucket row-group pruning until the next compaction
-    * rewrites them subject-sorted. Likewise the r14 per-level modulus
-    * marker ([[LevelBucketMarker]]): levels without one read the store
-    * marker as fallback (whose value cannot have moved while they
-    * survive — re-pin refuses), and compaction rewrites them
-    * self-described. */
+    * dirs carry `sbkt=` children and their modulus in
+    * [[LevelBucketMarker]]), readers handle bucketed and unbucketed
+    * levels side by side, and pruning simply skips unbucketed levels —
+    * a store whose levels are all below `bucketMinRows` gains bucketed
+    * levels in place (new lake-sized deltas bucketed; the next lake-sized
+    * compaction buckets the base). File ORDER (the subject-first sort)
+    * is not a format property either. A bucketed level WITHOUT
+    * [[LevelBucketMarker]] (written before per-level self-description)
+    * is refused by pruned reads rather than read under a guessed
+    * modulus; such a store is replayed into a fresh one. */
   val IdentityFormat = 3
   val FormatMarker = "_FORMAT"
 
@@ -1681,20 +1537,18 @@ object TripletStore {
     * becomes the cost and the semi-join wins. The whole cap range
     * pushes as ONE In through Spark 4.1's native set path — footer
     * stats + subject-bloom evaluation per row group, no or-tree, no
-    * recursion cliff: tools/in_pushdown_r14.txt measured it pruning at
-    * 5000 literals where the r13 design assumed a range collapse and
-    * capped the pushed or-tree at 1024 (the or-tree itself
-    * StackOverflows in (1024, 1536] — tools/pushdown_cliff_r14.txt —
-    * which is why the session In-threshold is left at its default and
-    * never raised). */
+    * recursion cliff: the r14 in-pushdown matrix (SCALE.md § Triple
+    * store) measured it pruning at 5000 literals where the r13 design
+    * assumed a range collapse and capped the pushed or-tree at 1024 (the
+    * or-tree itself StackOverflows in (1024, 1536], which is why the
+    * session In-threshold is left at its default and never raised). */
   val DefaultSubjectLiteralCap = 10000
 
   /** Threshold ABOVE which a literal subject list, when a
     * deployment-raised `inFilterThreshold` would force the or-tree form
     * on it (at the default threshold of 10 nothing here forms one),
-    * gets chunked: the r14 cliff probe measured a 1024-deep pushed
-    * or-of-equals safe and 1536 a task-killing StackOverflowError
-    * (tools/pushdown_cliff_r14.txt). */
+    * gets chunked: r14 measured a 1024-deep pushed or-of-equals safe and
+    * 1536 a task-killing StackOverflowError (SCALE.md § Triple store). */
   val OrTreeSafeLiterals = 1024
 
   /** Chunk size the defense actually splits at — deliberately HALF the
@@ -1735,10 +1589,9 @@ object TripletStore {
     * under auto-sizing, compaction RE-DERIVES it when the base outgrew
     * the recorded count ([[TripletStore!.compact(keep:Int)*]]) — so a
     * store that starts small does not keep its day-one N at 100 TB.
-    * Reads never guess from this marker alone: each bucketed level
-    * self-describes its own modulus ([[LevelBucketMarker]]); this
-    * store-level marker is the write-side source and the fallback for
-    * levels written before self-description shipped. */
+    * Reads never use this marker: each bucketed level self-describes its
+    * own modulus ([[LevelBucketMarker]]); this store-level marker is the
+    * write-side source only. */
   val BucketMarker = "_BUCKETS"
 
   /** Per-level modulus marker (a file INSIDE each bucketed level dir,

@@ -76,47 +76,6 @@ object Versioned {
         .localCheckpoint()
     }
 
-  /** The legacy-level rewrite verb graded end-to-end: the two-batch
-    * fixture loads into a scratch BUCKETED store (`bucketMinRows = 1` so
-    * the layout engages at fixture scale), both level dirs are stripped
-    * of their per-level modulus markers — simulating a store written
-    * before self-description and subject blooms shipped — and
-    * [[graft.load.TripletStore.rewriteLegacyLevels]] modernizes them in
-    * ONE claimed pass. The full ranges state then reads back THROUGH
-    * the rewritten sibling generations (`rv=` dirs, preferred by the
-    * level picker) and must hash-match the same pure-SQL two-batch
-    * MERGE restatement as q_version_history: identical rows, different
-    * physical read path — any drift in the rewrite's row fidelity, its
-    * modulus choice, or the generation preference mismatches here. */
-  def legacyRewrite(s: SparkSession, dir: String): DataFrame = {
-    // the intake is byte-for-byte the lookup verbs' bucketed fixture
-    // store (same geometry, same two merges) — the rewrite MUTATES its
-    // store, so it continues from a private replica of the
-    // session-shared state, replicated through the store's own commit
-    // protocol ([[TripletStore.replicateTo]]; 8 buckets not the 64
-    // floor, same geometry rationale as [[fixtureStoreRoot]])
-    val root = fixtureStoreRoot(s, dir)
-    Scratch.withScratch("graft_lr_q", dir) { tmp =>
-      new TripletStore(s, root.getAbsolutePath,
-        bucketMinRows = 1L, subjectBuckets = 8).replicateTo(tmp)
-      val store = new TripletStore(s, tmp.getAbsolutePath,
-        bucketMinRows = 1L, subjectBuckets = 8)
-      Seq("v=0", "v=1").foreach { n =>
-        val m = new java.io.File(new java.io.File(tmp, n),
-          TripletStore.LevelBucketMarker)
-        require(m.delete(), s"fixture level $n was not self-described")
-      }
-      val rewritten = store.rewriteLegacyLevels()
-      require(rewritten.toSet == Set("rv=0", "rv=1"),
-        s"expected both fixture levels rewritten, got $rewritten")
-      store.ranges.select(col("subject"), col("predicate"), col("obj"),
-          expr("unix_micros(useStart) div 1000").as("start_ms"),
-          expr("unix_micros(useEnd) div 1000").as("end_ms"),
-          col("deprecated"))
-        .localCheckpoint()
-    }
-  }
-
   /** V6 delta emit, oracle-graded: triples added / retired between the two
     * snapshots — pure anti-joins over versions (`GraphHandler.py:78-148`).
     * Added = batch-2 fresh triples; retired = the deprecate-changed set. */
@@ -472,8 +431,8 @@ object Versioned {
     * already exists. Each verb's READ stays end-to-end (full
     * reconstruction for ranges/delta/as-of; bucket-pruned
     * literal-pushdown scans for the lookups) — only the fixture build
-    * is shared, and the mutating verbs (legacy rewrite, compaction,
-    * TTL, the streaming load) still build private stores. The read
+    * is shared, and the mutating verbs (compaction, TTL, the streaming
+    * load) still build private stores. The read
     * verbs' rows are layout-independent by construction (bucketing is
     * physical placement only; q_subject_lookup's oracle pinned that in
     * r13). The scratch dir outlives the query and is removed by a JVM
@@ -590,7 +549,6 @@ object Versioned {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_version_history" -> versionHistory _,
-    "q_legacy_rewrite" -> legacyRewrite _,
     "q_version_delta" -> versionDelta _,
     "q_version_asof" -> versionAsOf _,
     "q_version_compacted" -> versionCompacted _,
@@ -601,9 +559,6 @@ object Versioned {
 
   val oracles: Map[String, String] = Map(
     "q_version_history" -> versionHistorySql,
-    // identical state through the rewritten-generation read path: the
-    // oracle IS the two-batch MERGE restatement
-    "q_legacy_rewrite" -> versionHistorySql,
     "q_version_delta" -> versionDeltaSql,
     "q_version_asof" -> versionAsOfSql,
     "q_version_compacted" -> versionCompactedSql,

@@ -77,7 +77,8 @@ abstract class BatchedSignatureStore(spark: SparkSession, path: String) {
     * action on the read path; the physical cleanup stays owner-driven
     * ([[recoverCompaction]] at the next maintenance entry). A marker
     * whose target id is NOT token-matched masks nothing: that `b=next`
-    * is a racing ingest's real data and every older dir is still live. */
+    * is a racing ingest's real data and every older dir is still live.
+    * A tokenless marker throws ([[readMarker]]). */
   private def committedBatches: Seq[Int] = {
     // marker BEFORE the dir listing: the other order races a completing
     // recovery (marker deleted between the two reads) into handing the
@@ -87,24 +88,10 @@ abstract class BatchedSignatureStore(spark: SparkSession, path: String) {
     marker match {
       case Some((next, token)) if maintCommitted(next, token) =>
         all.filter(_ >= next)
-      // a LEGACY marker (no token) with a committed target is an old
-      // binary's landed consolidation (recoverCompaction's legacy arm):
-      // mask the superseded dirs for it too, or every reader
-      // double-counts — and resurrects sweep-evicted rows — until the
-      // first maintenance call after the upgrade
-      case Some((next, token))
-          if token.isEmpty && new java.io.File(
-            new java.io.File(storageRoot, s"b=$next"), "_SUCCESS").exists() =>
-        all.filter(_ >= next)
       case _ => all
     }
   }
 
-  /** The pending-maintenance marker's (target id, owner token), if any.
-    * The token ties the marker to ITS pass's consolidated dir: without
-    * it, recovery could not tell "my commit landed" from "a racing
-    * ingest's batch landed at the same dense id" — and would delete
-    * live batches below an ingest's commit. */
   /** The marker wire format (`"$next\n$token"`), parsed in ONE place —
     * [[readMarker]] and the rollback's ownership check must never drift
     * apart on it. */
@@ -114,13 +101,39 @@ abstract class BatchedSignatureStore(spark: SparkSession, path: String) {
       .map(n => (n, lines.drop(1).headOption.getOrElse("")))
   }
 
-  private def readMarker(): Option[(Int, String)] =
-    try
-      // single read, no exists() pre-check: the owner can delete the
-      // marker between the two calls (readers run concurrently with
-      // maintenance by contract) — a vanished marker is simply None
-      parseMarker(java.nio.file.Files.readAllBytes(pendingMarker.toPath))
-    catch { case _: java.io.IOException => None }
+  /** The pending-maintenance marker's (target id, owner token), if any.
+    * The token ties the marker to ITS pass's consolidated dir: without
+    * it, recovery could not tell "my commit landed" from "a racing
+    * ingest's batch landed at the same dense id" — and would delete
+    * live batches below an ingest's commit. Every marker this store
+    * writes carries a fresh token ([[writeMarker]]); a TOKENLESS one was
+    * left by a crashed pre-token pass, and both recovery readings are
+    * silently wrong for some store (rolling back resurrects
+    * sweep-evicted rows; finishing can delete live batches), so every
+    * read and maintenance entry refuses it.
+    *
+    * @throws BatchedSignatureStore.UntokenedMarkerException */
+  private def readMarker(): Option[(Int, String)] = {
+    val m =
+      try
+        // single read, no exists() pre-check: the owner can delete the
+        // marker between the two calls (readers run concurrently with
+        // maintenance by contract) — a vanished marker is simply None
+        parseMarker(java.nio.file.Files.readAllBytes(pendingMarker.toPath))
+      catch { case _: java.io.IOException => None }
+    m.foreach { case (next, token) =>
+      if (token.isEmpty)
+        throw new BatchedSignatureStore.UntokenedMarkerException(
+          s"pending-maintenance marker ${pendingMarker.getPath} for b=$next " +
+            "carries no owner token: it was left by a crashed maintenance " +
+            "pass of a binary that predates tokened markers, and whether " +
+            s"that pass's b=$next landed cannot be decided safely. Finish " +
+            s"it by hand: if b=$next is the pass's committed consolidation, " +
+            s"delete the b= dirs below it, else delete b=$next; then " +
+            "remove the marker.")
+    }
+    m
+  }
 
   /** True iff `b=next` is a COMMITTED dir carrying this maintenance
     * pass's own token file (written into the temp dir before the
@@ -193,11 +206,7 @@ abstract class BatchedSignatureStore(spark: SparkSession, path: String) {
     *    — finish the physical cleanup. Safe at any marker age: the pass
     *    LANDED, and finishing its idempotent deletions cannot hurt a
     *    still-live owner doing the same.
-    *  - LEGACY marker (no token — written by a pre-token binary) → the
-    *    old single-owner semantics apply verbatim: committed `b=next` is
-    *    that pass's consolidated batch (finish the cleanup — treating it
-    *    as never-landed would permanently resurrect sweep-evicted rows);
-    *    uncommitted is its torn write (rolled back).
+    *  - No token → [[readMarker]] throws; the store is left untouched.
     *  - Unmatched token, no commit: the pass either died pre-commit or
     *    is STILL IN FLIGHT on another owner — indistinguishable from
     *    here. A FRESH marker is presumed in flight and recovery THROWS
@@ -220,10 +229,6 @@ abstract class BatchedSignatureStore(spark: SparkSession, path: String) {
       val committed = new java.io.File(d, "_SUCCESS").exists()
       if (maintCommitted(next, token)) {
         dirsBelow(next).foreach(rmTree)
-        pendingMarker.delete()
-      } else if (token.isEmpty) {
-        if (committed) dirsBelow(next).foreach(rmTree)
-        else if (d.exists()) rmTree(d)
         pendingMarker.delete()
       } else {
         val age = System.currentTimeMillis() - pendingMarker.lastModified()
@@ -508,6 +513,13 @@ object BatchedSignatureStore {
     * deliberately NOT retried — a maintenance race is a scheduling bug
     * to surface, not a state to converge through. */
   class ConcurrentMaintenanceException(msg: String)
+    extends IllegalStateException(msg)
+
+  /** The store holds a pending-maintenance marker with no owner token
+    * (a crashed pre-token pass). Neither recovery direction is safe to
+    * take blind, so reads and maintenance refuse until an operator
+    * resolves it; the store is untouched. */
+  class UntokenedMarkerException(msg: String)
     extends IllegalStateException(msg)
 
   /** Result of a full-recall dedup SWEEP over a standing index — the

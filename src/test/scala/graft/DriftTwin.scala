@@ -19,11 +19,6 @@ object DriftTwin {
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
-      // bench-identical session: AQE byte floor at the Spark default
-      // (the 2m arm was adjudicated and reverted — see Bench.scala);
-      // env-overridable so the floor itself can be A/B'd in one harness
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "1m"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

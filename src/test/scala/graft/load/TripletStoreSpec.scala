@@ -1084,7 +1084,7 @@ class TripletStoreSpec extends AnyFunSuite {
   test("torn int-marker reads retry briefly, then fail with the fs contract") {
     // publishMarkerExclusive's CREATE_NEW fallback (link-incapable fs)
     // documents that a reader racing the winner's in-flight content
-    // write can observe a SHORT file; bucketN/pinBucketN used to crash
+    // write can observe a SHORT file; pinBucketN used to crash
     // that reader with a bare NumberFormatException. The bounded retry
     // absorbs the milliseconds-long torn window; persistent garbage
     // still fails loudly, now naming the link-capable-fs contract.
@@ -1106,92 +1106,94 @@ class TripletStoreSpec extends AnyFunSuite {
     Scratch.rm(new java.io.File(dir))
   }
 
-  test("ONE compaction rewrites legacy survivors and re-pins in the same pass") {
-    // a pre-r14 bucketed level has no _SBKT_N (and no subject blooms)
-    // and reads the store marker as its modulus fallback — moving the
-    // marker under it would silently mis-prune. r14 made the re-pin
-    // REFUSE while such a survivor stood (several compaction cycles in
-    // the looser regime); r15 rewrites the survivor bloomed +
-    // self-described INSIDE the pass, under the already-held claim, so
-    // one compaction reaches both the modern read path and the re-pin.
-    val dir = Files.createTempDirectory("store_legacy").toString
+  test("a bucketed level without its modulus fails pruned reads loudly") {
+    // every bucketed level self-describes its modulus (_SBKT_N); a level
+    // without one predates that and its bucket ids cannot be trusted
+    // against any store-wide guess — pruning by the wrong modulus would
+    // silently drop live rows, so pruned reads and merges refuse it
+    val dir = Files.createTempDirectory("store_nomod").toString
     val store = new TripletStore(spark, dir, autoCompactEvery = 0,
-      targetRowsPerFile = 2L, bucketMinRows = 1L)
-    val wide = (1 to 150).map(i => (s"m$i", "name", s"n$i"))
-    store.merge(batch(wide, "2024-01-01 00:00:00"), ts("2024-01-01 00:00:00"))
-    store.merge(batch((1 to 1400).map(i => (s"g$i", "name", s"v$i")),
-      "2024-02-01 00:00:00"), ts("2024-02-01 00:00:00"))
-    store.merge(batch(Seq(("m7", "name", "changed")), "2024-03-01 00:00:00"),
-      ts("2024-03-01 00:00:00"))
-    val marker = new java.io.File(dir, TripletStore.BucketMarker)
-    assert(java.nio.file.Files.readString(marker.toPath).trim.toInt == 75)
-    // simulate a pre-r14 level: strip the surviving delta's modulus file
-    assert(new java.io.File(new java.io.File(dir, "v=2"),
-      TripletStore.LevelBucketMarker).delete())
-    store.compact(keep = 2)
-    // the survivor was rewritten as a committed sibling generation under
-    // its OLD modulus (the store marker at rewrite time), self-described
-    val rv = new java.io.File(dir, "rv=2")
-    assert(new java.io.File(rv, "_SUCCESS").exists(),
-      "the legacy survivor must be rewritten in the SAME pass")
-    assert(java.nio.file.Files.readString(new java.io.File(rv,
-      TripletStore.LevelBucketMarker).toPath).trim.toInt == 75,
-      "the rewrite keeps the level's original modulus, self-described")
-    // ...and the original stays standing as the version-slot guard (an
-    // in-place swap would open a silent missing-level reader window)
-    assert(new java.io.File(dir, "v=2").exists(),
-      "the original legacy dir keeps guarding its version slot")
-    // with every survivor self-described, the SAME pass re-pins:
-    // base=1 carries 1550 rows → candidate 775 >= 2*75
-    assert(java.nio.file.Files.readString(marker.toPath).trim.toInt == 775,
-      "one maintenance pass must reach re-pin eligibility AND re-pin")
-    // reads span the new-N base and the rewritten old-N survivor
-    assert(store.currentTriplesFor(Seq("m7")).select("obj")
-      .as[String].collect().toSet == Set("changed"))
-    assert(store.currentTriples.count() == 1550)
-    // the next full compaction folds the rewritten survivor into the
-    // base and sweeps both generations with the dropped version
-    store.compact(keep = 1)
-    assert(java.nio.file.Files.readString(marker.toPath).trim.toInt == 775)
-    assert(store.currentTriplesFor(Seq("m7")).select("obj")
-      .as[String].collect().toSet == Set("changed"))
-    assert(store.currentTriples.count() == 1550)
-    Scratch.rm(new java.io.File(dir))
-  }
-
-  test("rewriteLegacyLevels modernizes live legacy levels in one claimed pass") {
-    // the standalone maintenance verb: no compaction, no cut — every
-    // LIVE legacy level gains its bloomed, self-described sibling in one
-    // pass, reads switch over immediately, and a second call is a no-op.
-    val dir = Files.createTempDirectory("store_lrw").toString
-    val store = new TripletStore(spark, dir, autoCompactEvery = 0,
-      targetRowsPerFile = 2L, bucketMinRows = 1L)
-    store.merge(batch((1 to 150).map(i => (s"m$i", "name", s"n$i")),
+      bucketMinRows = 1L, subjectBuckets = 8)
+    store.merge(batch((1 to 20).map(i => (s"m$i", "name", s"n$i")),
       "2024-01-01 00:00:00"), ts("2024-01-01 00:00:00"))
     store.merge(batch(Seq(("m7", "name", "changed")), "2024-02-01 00:00:00"),
       ts("2024-02-01 00:00:00"))
-    // both deltas become "legacy"
-    assert(new java.io.File(new java.io.File(dir, "v=0"),
-      TripletStore.LevelBucketMarker).delete())
     assert(new java.io.File(new java.io.File(dir, "v=1"),
       TripletStore.LevelBucketMarker).delete())
-    val rewritten = store.rewriteLegacyLevels()
-    assert(rewritten.toSet == Set("rv=0", "rv=1"), rewritten)
-    Seq("rv=0", "rv=1").foreach { rn =>
-      val d = new java.io.File(dir, rn)
-      assert(new java.io.File(d, "_SUCCESS").exists(), s"$rn not committed")
-      assert(java.nio.file.Files.readString(new java.io.File(d,
-        TripletStore.LevelBucketMarker).toPath).trim.toInt == 75,
-        s"$rn must self-describe the store modulus it was bucketed with")
+    var rows: Option[Long] = None
+    val e1 = intercept[IllegalStateException] {
+      rows = Some(store.currentTriplesFor(Seq("m7")).count())
     }
-    // the claim released cleanly and reads are unchanged
-    assert(!new java.io.File(dir, TripletStore.CompactionMarker).exists())
-    assert(store.currentTriplesFor(Seq("m7")).select("obj")
-      .as[String].collect().toSet == Set("changed"))
-    assert(store.currentTriples.count() == 150)
-    // idempotent: everything already modern
-    assert(store.rewriteLegacyLevels().isEmpty)
+    assert(e1.getMessage.contains("v=1") &&
+      e1.getMessage.contains("predates per-level self-description"),
+      e1.getMessage)
+    val e2 = intercept[IllegalStateException] {
+      rows = Some(store.merge(batch(Seq(("m8", "name", "again")),
+        "2024-03-01 00:00:00"), ts("2024-03-01 00:00:00")).nNew)
+    }
+    assert(e2.getMessage.contains("v=1"), e2.getMessage)
+    assert(rows.isEmpty, "neither read may return rows")
+    assert(store.currentVersion == 1, "the refused merge must not commit")
     Scratch.rm(new java.io.File(dir))
+  }
+
+  test("one layout law: bucketed levels self-describe after every write path") {
+    // merge, compact(keep) (with a bucket re-pin), compact(olderThan)
+    // and replicateTo each leave only self-described bucketed levels,
+    // no other level-dir generation, and the current graph of a fresh
+    // unbucketed replay of the same batches
+    val dir = Files.createTempDirectory("store_layout").toString
+    val store = new TripletStore(spark, dir, autoCompactEvery = 0,
+      targetRowsPerFile = 1L, bucketMinRows = 1L)
+    val replayDir = Files.createTempDirectory("store_replay").toString
+    val replay = new TripletStore(spark, replayDir, autoCompactEvery = 0)
+    def mergeBoth(rows: Seq[(String, String, String)], t: String): Unit = {
+      store.merge(batch(rows, t), ts(t))
+      replay.merge(batch(rows, t), ts(t))
+    }
+    def triples(df: DataFrame) =
+      df.select("subject", "predicate", "obj").as[(String, String, String)]
+        .collect().toSet
+    val probe = Seq("m1", "m6", "m70", "g1", "g80")
+    def law(root: java.io.File, st: TripletStore, step: String): Unit = {
+      val levels = root.listFiles().toSeq.filter(f => f.isDirectory &&
+        new java.io.File(f, "_SUCCESS").exists())
+      assert(levels.forall(f => f.getName.startsWith("v=") ||
+        f.getName.startsWith("base=")), s"$step: ${levels.map(_.getName)}")
+      val bucketed = levels.filter(_.listFiles().exists(c =>
+        c.isDirectory && c.getName.startsWith(s"${TripletStore.BucketCol}=")))
+      assert(bucketed.nonEmpty, s"$step: the law needs a bucketed level")
+      bucketed.foreach(f => assert(
+        new java.io.File(f, TripletStore.LevelBucketMarker).exists(),
+        s"$step: ${f.getName} lacks ${TripletStore.LevelBucketMarker}"))
+      assert(triples(st.currentTriples) == triples(replay.currentTriples), step)
+      assert(triples(st.currentTriplesFor(probe)) ==
+        triples(replay.currentTriplesFor(probe)), step)
+    }
+    val root = new java.io.File(dir)
+    mergeBoth((1 to 70).map(i => (s"m$i", "name", s"n$i")), "2024-01-01 00:00:00")
+    mergeBoth((1 to 80).map(i => (s"g$i", "name", s"v$i")) ++
+      (1 to 5).map(i => (s"m$i", "name", s"x$i")), "2024-02-01 00:00:00")
+    mergeBoth(Seq(("m6", "name", "y6"), ("g1", "name", "y1")),
+      "2024-03-01 00:00:00")
+    law(root, store, "merge")
+    val pinned = Files.readString(
+      new java.io.File(dir, TripletStore.BucketMarker).toPath).trim.toInt
+    store.compact(keep = 2)
+    val repinned = Files.readString(
+      new java.io.File(dir, TripletStore.BucketMarker).toPath).trim.toInt
+    assert(repinned >= 2 * pinned, s"expected a re-pin from $pinned, got $repinned")
+    law(root, store, "compact(keep)")
+    mergeBoth(Seq(("m70", "name", "z70"), ("g80", "name", "z80")),
+      "2024-04-01 00:00:00")
+    law(root, store, "merge after re-pin")
+    store.compact(olderThan = ts("2024-02-15 00:00:00"))
+    law(root, store, "compact(olderThan)")
+    val dst = Files.createTempDirectory("store_replica").toFile
+    store.replicateTo(dst)
+    law(dst, new TripletStore(spark, dst.getAbsolutePath, autoCompactEvery = 0,
+      targetRowsPerFile = 1L, bucketMinRows = 1L), "replicateTo")
+    Seq(root, new java.io.File(replayDir), dst).foreach(Scratch.rm)
   }
 
   test("claim liveness is clock-free: skewed mtime survives, frozen seq is taken over") {

@@ -112,7 +112,7 @@ object EtlLifecycleScaleProbe {
     // contract says the second merge must track the TOUCHED slice —
     // down roughly with the batch, not flat at the snapshot's cost.
     // (Bucket-level FILE pruning needs touched-buckets < N, i.e. a
-    // micro-batch of tens of subjects — StoreScaleProbe's arm 3 pins
+    // micro-batch of tens of subjects — SCALE.md § Triple store records
     // that regime; here 10% of subjects covers all 64 buckets and the
     // win is the row-level touched-slice shuffle.)
     def timeSecondMerge(dir: String, keepOneIn: Option[Int]): (Long, Double) = {

@@ -145,25 +145,39 @@ class DedupIndexSpec extends AnyFunSuite {
       "recovery must not delete live batches below an ingest's commit")
   }
 
-  test("legacy pre-token marker: a committed consolidated batch finishes cleanup") {
-    // upgrade path: an OLD binary's sweep crashed between its b=2 commit
-    // and old-dir removal, leaving the single-line marker format.
-    // Treating it as never-landed would permanently resurrect the rows
-    // that sweep evicted — legacy markers keep the legacy semantics.
+  test("a tokenless pending marker is refused loudly, store untouched") {
+    // a marker without an owner token (left by a crashed pre-token pass)
+    // cannot tell its own committed consolidation from a racing ingest's
+    // batch: finishing could delete live batches, and the unmatched-token
+    // rollback would resurrect the rows that pass's sweep evicted. Reads
+    // and maintenance both throw the declared error instead.
     val dir = Files.createTempDirectory("dedup_crash4").toString
     val idx = new DedupIndex(spark, dir)
     idx.ingest(docs(1L -> "alpha beta gamma delta"))
     idx.ingest(docs(2L -> "epsilon zeta eta theta"))
-    // the old sweep kept only doc 2 (doc 1 "evicted")
+    // a sweep that kept only doc 2 landed b=2, then crashed
     idx.signatures.filter(org.apache.spark.sql.functions.col("doc_id") === 2L)
       .write.parquet(s"$dir/b=2")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir, "_COMPACT_PENDING"), "2".getBytes("UTF-8"))
+    val marker = new java.io.File(dir, "_COMPACT_PENDING")
+    java.nio.file.Files.write(marker.toPath, "2".getBytes("UTF-8"))
+    // aged past the in-flight window, so the tokened path would roll back
+    marker.setLastModified(
+      System.currentTimeMillis() - BatchedSignatureStore.MaintInFlightMs - 1000)
     val reopened = new DedupIndex(spark, dir)
-    assert(reopened.compact() == 1)
-    assert(reopened.signatures.select("doc_id").as[Long].collect().toSet
-      == Set(2L), "legacy cleanup must not resurrect evicted rows")
-    assert(!new java.io.File(dir, "_COMPACT_PENDING").exists())
+    val e = intercept[BatchedSignatureStore.UntokenedMarkerException] {
+      reopened.compact()
+    }
+    assert(e.getMessage.contains("b=2"), e.getMessage)
+    intercept[BatchedSignatureStore.UntokenedMarkerException] {
+      reopened.size
+    }
+    intercept[BatchedSignatureStore.UntokenedMarkerException] {
+      reopened.ingest(docs(3L -> "iota kappa lambda mu"))
+    }
+    assert(marker.exists(), "the marker is evidence and must survive")
+    assert(Seq("b=0", "b=1", "b=2").forall(n => new java.io.File(dir, n).exists()),
+      "no batch dir may be deleted or rolled back")
+    assert(!new java.io.File(dir, "b=3").exists())
   }
 
   test("empty and shingle-less docs still dedup exactly") {
