@@ -69,9 +69,10 @@ object Bench {
       val dt = (System.nanoTime() - t0) / 1e9
       // drop checkpoint/cache blocks the finished query left behind so
       // accumulated storage doesn't tax later queries' timings —
-      // EXCEPT deliberate session-lived memos (graft.memo.*: the media
-      // family's decode-once table, a few KB), which exist precisely to
-      // be shared across queries/iterations; the session still ends
+      // EXCEPT the two deliberate session-lived memos (graft.memo.*: the
+      // media family's decoded signature table and the graph family's
+      // sampled co-purchase edges, each a few KB), which exist precisely
+      // to be shared across queries/iterations; the session still ends
       // with a FULL sweep below, so pinnedFinal stays 0
       spark.sparkContext.getPersistentRDDs.values
         .filterNot(r => Option(r.name).exists(_.startsWith("graft.memo.")))

@@ -25,28 +25,6 @@ object Scratch {
       prefix + "_" + md5hex(key) + "_" +
         java.util.UUID.randomUUID().toString.take(8))
 
-  /** Recursive driver-side copy of a COMMITTED directory tree — the
-    * dir-level state-replication seam for instruments whose mutating
-    * verbs continue from a session-shared store state (a store's layout
-    * is self-contained: parquet + relative marker files, no absolute
-    * paths), so a copy is byte-identical to the source it came from.
-    * The source must be quiescent (no concurrent writer); KB-sized
-    * fixture stores copy in milliseconds. */
-  def copyDir(src: File, dst: File): Unit = {
-    // fail fast, never silently copy "nothing": a missing/unreadable
-    // source (e.g. a shared memoized store root swept externally between
-    // its validity check and this copy) would otherwise hand the caller
-    // an EMPTY replica and a wrong answer instead of a loud error
-    require(src.isDirectory, s"copyDir source missing or not a directory: $src")
-    dst.mkdirs()
-    Option(src.listFiles()).getOrElse(Array.empty).foreach { f =>
-      val t = new File(dst, f.getName)
-      if (f.isDirectory) copyDir(f, t)
-      else java.nio.file.Files.copy(f.toPath, t.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
   /** Run `body` with a fresh scratch dir, ALWAYS removing it afterwards —
     * a crashed run must not leak a uniquely-named directory forever.
     * Anything `body` returns must not read the directory lazily

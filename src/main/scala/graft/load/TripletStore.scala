@@ -1244,44 +1244,6 @@ class TripletStore(spark: SparkSession, path: String,
     }
   }
 
-  /** Replicate this store's COMMITTED state into `dst` (an empty or
-    * absent directory) through the SAME commit protocol the store's own
-    * writers use, instead of a raw recursive tree copy: only committed
-    * level dirs travel (`v=`/`base=`, `_SUCCESS`-gated), each landing in
-    * the replica via a
-    * `.tmp-` sibling plus ONE atomic rename ([[AtomicDirCommit]]), and
-    * only the durable store markers travel (format, bucket count,
-    * retention horizon) — never a claim marker (`_COMPACTING` and its
-    * sequence sidecar are an OWNER's liveness state: a raw copy taken
-    * while the source is claimed would hand the replica a phantom
-    * in-flight compaction), never `.tmp-` garbage, never a torn dir. A
-    * reader of the replica therefore sees a committed store at every
-    * instant, exactly as if its levels had been written in place. File
-    * bytes are copied driver-side — the KB-fixture replication seam
-    * (instruments whose mutating verbs continue from a session-shared
-    * state); a lake-scale replica would stream level-by-level through
-    * the cluster instead, with the same commit discipline. */
-  def replicateTo(dst: java.io.File): Unit = {
-    dst.mkdirs()
-    Seq(FormatMarker, BucketMarker, HorizonMarker).foreach { name =>
-      val src = new java.io.File(fs, name)
-      if (src.exists()) {
-        val tmp = new java.io.File(dst,
-          s".tmp-marker-${java.util.UUID.randomUUID().toString.take(8)}")
-        java.nio.file.Files.copy(src.toPath, tmp.toPath)
-        java.nio.file.Files.move(tmp.toPath, new java.io.File(dst, name).toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-    (deltaVersions.map(d => s"v=$d") ++ baseVersions.map(b => s"base=$b"))
-      .foreach { n =>
-        val tmp = AtomicDirCommit.tmpFor(dst, n.replace("=", ""))
-        Scratch.copyDir(new java.io.File(fs, n), tmp)
-        AtomicDirCommit.commit(tmp, new java.io.File(dst, n))
-      }
-  }
-
   /** Compaction: materialize the full state at the oldest retained
     * version as a base snapshot, then drop every level it supersedes —
     * the dropped versions (all but the newest `keep`) stop being

@@ -5,28 +5,35 @@ import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-scoped memoization for expensive per-(session, dir) artifacts
-  * (a decoded corpus checkpoint, a built fixture store): keyed on the
-  * SparkSession OBJECT — identity, not `System.identityHashCode`, whose
-  * values are reusable after GC and let a NEW session collide with a
-  * dead one's hash and be handed an artifact bound to the stopped
-  * session. Entries of STOPPED sessions are pruned on every access, so
-  * retention is bounded by the next memo touch instead of process
-  * lifetime (weak keys cannot do this: the cached values — DataFrames,
-  * stores — strongly reference their session, which would pin a weak
-  * key forever). `valid` re-checks a hit before handing it out (a
-  * swept checkpoint, a deleted scratch dir), and callers should include
-  * `artifact.sparkSession eq s`-style identity in it where the value
-  * carries a session.
+/** Session-scoped memoization for expensive per-(session, dir) derived
+  * tables. One rule decides what may be memoized: the value is a
+  * DataFrame derived only from the dir's immutable input tables, and
+  * every query reads it as-is. Two memos pass it — the decoded media
+  * signatures ([[graft.queries.MediaDedup.corpusSignatures]]) and the
+  * sampled co-purchase edges ([[graft.queries.Graph.coPurchaseEdges]]).
+  * The output of the engine's own write path (a merged store, an
+  * ingested index) is never memoized: a query that grades that path
+  * builds its own state.
+  *
+  * Keyed on the SparkSession OBJECT — identity, not
+  * `System.identityHashCode`, whose values are reusable after GC and let
+  * a NEW session collide with a dead one's hash and be handed an
+  * artifact bound to the stopped session. Entries of STOPPED sessions
+  * are pruned on every access, so retention is bounded by the next memo
+  * touch instead of process lifetime (weak keys cannot do this: the
+  * cached DataFrames strongly reference their session, which would pin
+  * a weak key forever). `valid` re-checks a hit before handing it out
+  * (a swept checkpoint), and callers should include
+  * `artifact.sparkSession eq s`-style identity in it.
   *
   * Build-once is enforced PER KEY, not per memo: each (session, key)
   * slot holds a promise its first claimant completes, and the memo-wide
   * monitor guards only the map bookkeeping — never the multi-second
   * Spark build itself. The earlier shape held the monitor across
   * `compute`, so a cache HIT for one dir blocked behind an unrelated
-  * dir's build (and the media and lookup memos each serialized every
-  * session in the JVM through one lock); now a hit returns as soon as
-  * its own promise is complete. A failed build removes its slot and
+  * dir's build (and each memo serialized every session in the JVM
+  * through one lock); now a hit returns as soon as its own promise is
+  * complete. A failed build removes its slot and
   * propagates to its owner; concurrent waiters of the failed slot
   * retry the build themselves (the pre-latch behavior, serialized per
   * caller). Re-entrant `getOrCompute` from inside `compute` is
@@ -83,7 +90,7 @@ final class SessionMemo[V] {
             SessionMemo.hitCount.incrementAndGet()
             return v
           case scala.util.Success(_) =>
-            // stale artifact (swept checkpoint, deleted dir): drop the
+            // stale artifact (swept checkpoint): drop the
             // slot — unless someone already replaced it — and loop
             synchronized {
               Option(entries.get(s))

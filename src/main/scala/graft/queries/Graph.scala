@@ -530,7 +530,13 @@ object Graph {
     * to derive the SAME edge table their verbs then analyze; in
     * production a graph is materialized at build time, not per
     * analytics consumer. Each verb's own machinery (peel rounds, degree
-    * joins, walk steps) still runs end-to-end on top. */
+    * joins, walk steps) still runs end-to-end on top.
+    *
+    * Invalidation: the lineitem table is immutable, so the entry is
+    * keyed by the session OBJECT and the dir alone
+    * ([[graft.operators.SessionMemo]]). It is rebuilt when its session
+    * stops or when the checkpoint is swept (`checkpointLive` fails the
+    * hit once a harness unpersists its blocks). */
   private val coPurchaseMemo = new graft.operators.SessionMemo[DataFrame]
   private[graft] def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
     coPurchaseMemo.getOrCompute(s, dir)(df => (df.sparkSession eq s) &&

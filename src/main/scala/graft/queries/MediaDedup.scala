@@ -66,38 +66,24 @@ object MediaDedup {
     * memoized localCheckpoint is the production shape — a corpus
     * decodes at arrival, not per downstream reader — and each query's
     * own machinery (banding, caps, sweeps, oracles) still runs
-    * end-to-end on top of it. Keyed by (session OBJECT, dir) via
-    * [[graft.operators.SessionMemo]]: checkpoints die with their
-    * session (stopped sessions prune on access; identity keying means a
-    * new session can never inherit a dead one's checkpoint), and the
-    * table is (doc_id, sig) — a few KB per entry. */
+    * end-to-end on top of it. Held in a
+    * [[graft.operators.SessionMemo]]; the table is (doc_id, sig) — a
+    * few KB per entry.
+    *
+    * Invalidation: the dir's input tables are immutable, so the entry is
+    * keyed by the session OBJECT and the dir alone. It is rebuilt when
+    * its session stops (stopped sessions prune on access; identity
+    * keying means a new session never inherits a dead one's checkpoint)
+    * or when the checkpoint is swept (a harness that unpersists every
+    * RDD between queries kills the only copy of its blocks, and
+    * `checkpointLive` then fails the hit). */
   private val decodeMemo = new graft.operators.SessionMemo[DataFrame]
   private[graft] def corpusSignatures(s: SparkSession, dir: String): DataFrame =
-    decodeMemo.getOrCompute(s, dir)(
-      df => (df.sparkSession eq s) && checkpointLive(df)) {
-      val c = mediaSignatures(mediaOf(s, dir)).localCheckpoint()
-      // name the checkpoint's RDD so storage-hygiene sweeps can tell
-      // the session-lived memo from a finished query's dead blocks
-      // (graft.Bench exempts graft.memo.* from its per-query sweep and
-      // still ends the session with a full sweep — final pinned
-      // count stays 0)
-      c.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.setName(s"graft.memo.mediaSig:$dir")
-        case _ => ()
-      }
-      c
-    }
-
-  /** A harness that sweeps ALL persistent RDDs between queries
-    * (graft.Verify does; so does any caller outside our control) kills
-    * the memoized checkpoint's blocks — the ONLY copy of its data — so
-    * a stale entry must be detected and redecoded, never read. */
-  private def checkpointLive(df: DataFrame): Boolean =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
-      case _ => true
+    decodeMemo.getOrCompute(s, dir)(df => (df.sparkSession eq s) &&
+      graft.operators.SessionMemo.checkpointLive(df)) {
+      graft.operators.SessionMemo.nameCheckpoint(
+        mediaSignatures(mediaOf(s, dir)).localCheckpoint(),
+        s"graft.memo.mediaSig:$dir")
     }
 
   /** The documents table as opaque media payloads. */
@@ -644,40 +630,20 @@ object MediaDedup {
     * through. The oracle replays both stages at their own caps. */
   private[graft] val SweepDemoCap = 8
 
-  /** The two-batch [[SweepDemoCap]] intake STATE, built ONCE per
-    * (session, dir) through the REAL capped-ingest machinery — the
-    * standing index the sweep-cadence pair reads. q_media_sweep and
-    * q_sweep_decision are the ACT and DECIDE members of one LSM triad:
-    * in production both verbs operate on the SAME standing index (a
-    * corpus is ingested once, then maintenance measures / decides /
-    * acts on that state), while each graded row used to re-run the
-    * byte-identical two-batch intake privately — the same
-    * instrument-construction duplication the decode memo
-    * ([[corpusSignatures]]) and the version family's fixture store
-    * closed. Each verb still runs end-to-end on a PRIVATE store seeded
-    * from this state ([[graft.similarity.BatchedSignatureStore
-    * .seedBatch]]) because the sweep MUTATES its index: sharing the
-    * store object would make the decision's rows depend on whether the
-    * sweep ran first. Sweep and decision are pure functions of the
-    * stored rows (never the batch-dir split), so the seeded replica is
-    * output-identical — the oracles replay the same intake + verb
-    * composition unchanged. */
-  private val intakeMemo = new graft.operators.SessionMemo[DataFrame]
-  private[graft] def sweepDemoIntake(s: SparkSession, dir: String): DataFrame =
-    intakeMemo.getOrCompute(s, dir)(
-      df => (df.sparkSession eq s) && checkpointLive(df)) {
-      graft.load.Scratch.withScratch("graft_media_intake_q", dir) { tmp =>
-        val idx = new graft.similarity.MediaDedupIndex(s, tmp.getAbsolutePath)
-        val sig = corpusSignatures(s, dir)
-          .select(col("doc_id").as("media_id"), col("sig"))
-        idx.ingestSignatures(sig.filter(col("media_id") < 250),
-          bucketCap = SweepDemoCap)
-        idx.ingestSignatures(sig.filter(col("media_id") >= 250),
-          bucketCap = SweepDemoCap)
-        graft.operators.SessionMemo.nameCheckpoint(
-          idx.signatures.localCheckpoint(), s"graft.memo.mediaIntake:$dir")
-      }
-    }
+  /** A fresh [[graft.similarity.MediaDedupIndex]] in `tmp` with the
+    * corpus ingested as two capped batches (media_id < 250, then the
+    * rest) through the real capped-ingest machinery — the standing
+    * index the sweep, the sweep decision and the recall instrument act
+    * on. */
+  private def twoBatchIntake(s: SparkSession, dir: String, tmp: java.io.File,
+                             cap: Int): graft.similarity.MediaDedupIndex = {
+    val idx = new graft.similarity.MediaDedupIndex(s, tmp.getAbsolutePath)
+    val sig = corpusSignatures(s, dir)
+      .select(col("doc_id").as("media_id"), col("sig"))
+    idx.ingestSignatures(sig.filter(col("media_id") < 250), bucketCap = cap)
+    idx.ingestSignatures(sig.filter(col("media_id") >= 250), bucketCap = cap)
+    idx
+  }
 
   /** Incremental intake then the SWEEP — the full LSM story graded
     * end-to-end: the q_media_incremental two-batch contract runs at
@@ -685,12 +651,10 @@ object MediaDedup {
     * [[graft.similarity.MediaDedupIndex.sweep]] at the production cap
     * evicts every non-keeper member of a near-dup group among the
     * accepted signatures. Output = post-sweep survivors with their
-    * arrival batch. The intake state is the session-shared
-    * [[sweepDemoIntake]]; the sweep runs on a private seeded replica. */
+    * arrival batch. */
   def mediaSweep(s: SparkSession, dir: String): DataFrame =
     graft.load.Scratch.withScratch("graft_media_sweep_q", dir) { tmp =>
-      val idx = new graft.similarity.MediaDedupIndex(s, tmp.getAbsolutePath)
-      idx.seedBatch(sweepDemoIntake(s, dir))
+      val idx = twoBatchIntake(s, dir, tmp, SweepDemoCap)
       idx.sweep()
       idx.signatures.select(col("media_id"),
           when(col("media_id") < 250, 1L).otherwise(2L).as("arrival_batch"))
@@ -733,9 +697,8 @@ object MediaDedup {
     * ladder will find every bucket cold). */
   def sweepDecision(s: SparkSession, dir: String): DataFrame =
     graft.load.Scratch.withScratch("graft_sweep_dec_q", dir) { tmp =>
-      val idx = new graft.similarity.MediaDedupIndex(s, tmp.getAbsolutePath)
-      idx.seedBatch(sweepDemoIntake(s, dir))
-      idx.sweepDecision(SweepDemoCap).localCheckpoint()
+      twoBatchIntake(s, dir, tmp, SweepDemoCap).sweepDecision(SweepDemoCap)
+        .localCheckpoint()
     }
 
   /** Replay: the capped-intake survivors at [[SweepDemoCap]]
@@ -850,33 +813,10 @@ object MediaDedup {
     * family to its keeper and cools them (recall recovered). Uniformly
     * sampled probes measured pre = post here — their truth was
     * cold-bucket reachable at any cap (COVERAGE.md round-11). */
-  /** The two-batch [[RecallCap]] intake STATE, built ONCE per (session,
-    * dir) — the [[sweepDemoIntake]] discipline at the recall
-    * instrument's engaged cap: the intake is the instrument's
-    * construction (the standing index whose forfeit/recover delta the
-    * two rows measure), the sweep mutates a private seeded replica. */
-  private val recallIntakeMemo = new graft.operators.SessionMemo[DataFrame]
-  private def recallCapIntake(s: SparkSession, dir: String): DataFrame =
-    recallIntakeMemo.getOrCompute(s, dir)(
-      df => (df.sparkSession eq s) && checkpointLive(df)) {
-      graft.load.Scratch.withScratch("graft_recall_intake_q", dir) { tmp =>
-        val idx = new graft.similarity.MediaDedupIndex(s, tmp.getAbsolutePath)
-        val sig0 = corpusSignatures(s, dir)
-          .select(col("doc_id").as("media_id"), col("sig"))
-        idx.ingestSignatures(sig0.filter(col("media_id") < 250),
-          bucketCap = RecallCap)
-        idx.ingestSignatures(sig0.filter(col("media_id") >= 250),
-          bucketCap = RecallCap)
-        graft.operators.SessionMemo.nameCheckpoint(
-          idx.signatures.localCheckpoint(), s"graft.memo.recallIntake:$dir")
-      }
-    }
-
   def recallAtCap(s: SparkSession, dir: String): DataFrame =
     graft.operators.Checkpoints.scoped {
       graft.load.Scratch.withScratch("graft_recall_q", dir) { tmp =>
-        val idx = new graft.similarity.MediaDedupIndex(s, tmp.getAbsolutePath)
-        idx.seedBatch(recallCapIntake(s, dir))
+        val idx = twoBatchIntake(s, dir, tmp, RecallCap)
         val preSigs = graft.operators.Checkpoints.ck(
           idx.signatures.select(col("media_id").as("doc_id"), col("sig")))
         // bands 1-3 are the ones a probe SHARES with its source (the

@@ -435,61 +435,18 @@ object Quantization {
        |  FROM ex) WHERE rn <= 5""".stripMargin
   }
 
-  /** [[graft.similarity.VectorIndex]] intake STATE — encoded rows + the
-    * frozen-model texts — built ONCE per (session, dir, kind) through the
-    * REAL ingest machinery, the [[MediaDedup.sweepDemoIntake]] /
-    * [[VectorOps]] semantic-intake discipline on the vector family's
-    * third index: in production a standing index is ingested once and
-    * the search / rebuild / maintenance verbs operate on THAT state,
-    * while each graded row used to re-run its byte-identical intake
-    * privately. Each verb still runs end-to-end on a PRIVATE replica
-    * seeded from this state ([[graft.similarity.BatchedSignatureStore
-    * .seedBatch]] rows + [[graft.similarity.VectorIndex.seedModels]]
-    * verbatim model texts — the codec persists models as an exact text
-    * roundtrip, so the replica is bit-identical) because rebuild / split
-    * / maintain MUTATE their store. Every verb is a pure function of
-    * (stored rows, frozen models), never of the batch-dir split, so the
-    * replica is verb-for-verb output-identical; the oracles replay the
-    * same intake + verb composition unchanged. */
-  private val viIntakeMemo =
-    new graft.operators.SessionMemo[(DataFrame, String, String)]
-  private def viIntake(s: SparkSession, dir: String, kind: String)
-                      (build: graft.similarity.VectorIndex => Unit)
-      : (DataFrame, String, String) =
-    viIntakeMemo.getOrCompute(s, s"$kind:$dir")(v => (v._1.sparkSession eq s) &&
-      graft.operators.SessionMemo.checkpointLive(v._1)) {
-      graft.load.Scratch.withScratch(s"graft_vi_intake_$kind", dir) { tmp =>
-        val idx = new graft.similarity.VectorIndex(s, tmp.getAbsolutePath)
-        build(idx)
-        val rows = graft.operators.SessionMemo.nameCheckpoint(
-          idx.table.localCheckpoint(), s"graft.memo.viIntake.$kind:$dir")
-        val (ivfT, sq8T) = idx.modelTexts
-        (rows, ivfT, sq8T)
-      }
-    }
-
-  /** Private replica of a memoized intake state at `tmp` — models first,
-    * then the rows as one committed batch. */
-  private def seededIndex(s: SparkSession, tmp: java.io.File,
-                          st: (DataFrame, String, String)): graft.similarity.VectorIndex = {
-    val idx = new graft.similarity.VectorIndex(s, tmp.getAbsolutePath)
-    idx.seedModels(st._2, st._3)
-    idx.seedBatch(st._1)
-    idx
+  /** The two-batch frozen-model intake of q_incremental_ann,
+    * q_ann_rebuild and q_codec_drift into a fresh `idx`: batch 1 = even
+    * vec_ids (fits and freezes the models), batch 2 = odd vec_ids
+    * encoded under them. */
+  private def frozenTwoBatchIntake(s: SparkSession, dir: String)
+                                  (idx: graft.similarity.VectorIndex): Unit = {
+    val corpus = t(s, dir, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+      .filter(col("vec_id") >= 10)
+    idx.ingest(corpus.filter(col("vec_id") % 2 === 0))
+    idx.ingest(corpus.filter(col("vec_id") % 2 =!= 0))
   }
-
-  /** The two-batch frozen-model intake shared by q_incremental_ann,
-    * q_ann_rebuild and q_codec_drift: batch 1 = even vec_ids (fits and
-    * freezes the models), batch 2 = odd vec_ids encoded under them. */
-  private def frozenTwoBatchIntake(s: SparkSession,
-                                   dir: String): (DataFrame, String, String) =
-    viIntake(s, dir, "frozen2") { idx =>
-      val corpus = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-        .filter(col("vec_id") >= 10)
-      idx.ingest(corpus.filter(col("vec_id") % 2 === 0))
-      idx.ingest(corpus.filter(col("vec_id") % 2 =!= 0))
-    }
 
   /** Incremental ANN index, graded end-to-end like q_incremental_dedup:
     * the corpus arrives in TWO batches appended to a scratch
@@ -499,14 +456,12 @@ object Quantization {
     * table. Hash-graded by [[incrementalAnnSql]], which replays the
     * batch-1-only fits (IVF Lloyd sample AND SQ8 min/max restricted to
     * the first batch) and the all-rows encode — any drift in the freeze
-    * discipline (e.g. an accidental refit on batch 2) mismatches. The
-    * intake state is the session-shared [[frozenTwoBatchIntake]]; the
-    * search runs on a private seeded replica. */
+    * discipline (e.g. an accidental refit on batch 2) mismatches. */
   def incrementalAnn(s: SparkSession, dir: String): DataFrame = {
     val embT = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val st = frozenTwoBatchIntake(s, dir)
     graft.load.Scratch.withScratch("graft_vi_q", dir) { tmp =>
-      val idx = seededIndex(s, tmp, st)
+      val idx = new graft.similarity.VectorIndex(s, tmp.getAbsolutePath)
+      frozenTwoBatchIntake(s, dir)(idx)
       idx.search(embT.filter(col("vec_id") < 10), topK = 5, nprobe = 2)
         .select(col("query_id"), col("neighbor_id"),
           round(col("cos"), 4).as("cos"))
@@ -608,9 +563,9 @@ object Quantization {
   def annRebuild(s: SparkSession, dir: String): DataFrame = {
     val embT = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val corpus = embT.filter(col("vec_id") >= 10)
-    val st = frozenTwoBatchIntake(s, dir)
     graft.load.Scratch.withScratch("graft_vr_q", dir) { tmp =>
-      val idx = seededIndex(s, tmp, st)
+      val idx = new graft.similarity.VectorIndex(s, tmp.getAbsolutePath)
+      frozenTwoBatchIntake(s, dir)(idx)
       idx.rebuild(corpus)
       idx.search(embT.filter(col("vec_id") < 10), topK = 5, nprobe = 2)
         .select(col("query_id"), col("neighbor_id"),
@@ -640,9 +595,9 @@ object Quantization {
   def cellSplit(s: SparkSession, dir: String): DataFrame = {
     val embT = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val corpus = embT.filter(col("vec_id") >= 10)
-    val st = viIntake(s, dir, "corpus")(_.ingest(corpus))
     graft.load.Scratch.withScratch("graft_cs_q", dir) { tmp =>
-      val idx = seededIndex(s, tmp, st)
+      val idx = new graft.similarity.VectorIndex(s, tmp.getAbsolutePath)
+      idx.ingest(corpus)
       val n = idx.table.count()
       val cap = (n * 21 + 159) / 160 // integer ceil(n * 1.05 / 8)
       val parentOf = idx.splitHotCells(corpus, cap)
@@ -732,13 +687,12 @@ object Quantization {
     * rebuild-vs-extend decision FAISS deployments make. */
   def codecDriftQ(s: SparkSession, dir: String): DataFrame = {
     val embT = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    // the measurement reads only the FROZEN MODELS of the standing
-    // two-batch index ([[frozenTwoBatchIntake]]) — never its code table —
-    // so the drift instrument parses the shared state's model texts
-    // directly (the same exact text roundtrip the on-disk files make)
-    val st = frozenTwoBatchIntake(s, dir)
-    val (ivf, sq8) = graft.similarity.VectorIndex.parseModelTexts(st._2, st._3)
-    locally {
+    // the measurement reads only the FROZEN MODELS of the two-batch
+    // index ([[frozenTwoBatchIntake]]), never its code table
+    graft.load.Scratch.withScratch("graft_cd_q", dir) { tmp =>
+      val idx = new graft.similarity.VectorIndex(s, tmp.getAbsolutePath)
+      frozenTwoBatchIntake(s, dir)(idx)
+      val (ivf, sq8) = idx.models.get
       val mins = typedLit(sq8.mins.toSeq)
       val maxs = typedLit(sq8.maxs.toSeq)
       val v = col("embedding").cast("array<double>")
@@ -817,19 +771,15 @@ object Quantization {
       transform(col("embedding"), x => x + lit(4.0)).as("embedding"))
     val allRows = corpus.unionByName(shifted)
     def f6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
-    // the two case stores' intake states are session-shared standing
-    // indexes ([[viIntake]]): drifted = models frozen on the original
+    // the two case stores: drifted = models frozen on the original
     // corpus with the +4.0-shifted copy ingested under them, clean =
-    // one batch fitting the whole corpus. maintainIfDrifted MUTATES its
-    // store (the drifted arm rebuilds), so each arm acts on a private
-    // seeded replica.
-    val driftedSt = viIntake(s, dir, "drift") { i =>
-      i.ingest(corpus); i.ingest(shifted) }
-    val cleanSt = viIntake(s, dir, "clean")(_.ingest(allRows))
+    // one batch fitting the whole corpus
     graft.load.Scratch.withScratch("graft_rd_q", dir) { tmp =>
       def caseRow(name: String, sub: String,
-                  intake: (DataFrame, String, String)) = {
-        val idx = seededIndex(s, new java.io.File(tmp, sub), intake)
+                  intake: graft.similarity.VectorIndex => Unit) = {
+        val idx = new graft.similarity.VectorIndex(s,
+          new java.io.File(tmp, sub).getAbsolutePath)
+        intake(idx)
         val st = idx.maintainIfDrifted(allRows, oorMax = 0.05)
         val (oorPost, _) = idx.codecDrift(allRows)
         val maxPopPost = idx.table.groupBy("cell")
@@ -839,15 +789,17 @@ object Quantization {
           if (st.rebuilt) 1L else 0L, st.genBefore.toLong,
           st.genAfter.toLong, f6(oorPost), maxPopPost)
       }
-      // the two case arms are INDEPENDENT (private replicas, disjoint
-      // scratch subdirs, session-shared intakes already built) — overlap
+      // the two case arms are INDEPENDENT (private stores in disjoint
+      // scratch subdirs) — overlap
       // them (guide §2.6) so the clean arm's jobs back-fill the executor
       // threads the drifted arm's tiny stages leave idle; each arm keeps
       // its own thread-confined Checkpoints scope
       val cleanF = scala.concurrent.Future {
-        graft.operators.Checkpoints.scoped(caseRow("clean", "c", cleanSt))
+        graft.operators.Checkpoints.scoped(
+          caseRow("clean", "c", _.ingest(allRows)))
       }(scala.concurrent.ExecutionContext.global)
-      val drifted = caseRow("drifted", "d", driftedSt)
+      val drifted = caseRow("drifted", "d", { i =>
+        i.ingest(corpus); i.ingest(shifted) })
       val clean = scala.concurrent.Await.result(
         cleanF, scala.concurrent.duration.Duration.Inf)
       Seq(drifted, clean).toDF("case_name", "oor_frac", "max_cell_share",

@@ -245,6 +245,22 @@ object VectorOps {
     * (every bucket cold) and evicts the admitted near-dups. */
   private[graft] val SemanticSweepCap = 6
 
+  /** A fresh [[graft.similarity.SemanticDedupIndex]] in `tmp` with the
+    * embeddings ingested as two batches (vec_id < 250, then the rest) at
+    * [[SemanticSweepCap]] — the standing index the semantic sweep and
+    * its decision act on. */
+  private def semanticSweepIntake(s: SparkSession, dir: String,
+                                  tmp: java.io.File): graft.similarity.SemanticDedupIndex = {
+    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val idx = new graft.similarity.SemanticDedupIndex(
+      s, tmp.getAbsolutePath, threshold = 0.2,
+      sketch = graft.similarity.SemanticSketch(
+        maxCandidatesPerVector = SemanticSweepCap))
+    idx.ingest(emb.filter(col("vec_id") < 250))
+    idx.ingest(emb.filter(col("vec_id") >= 250))
+    idx
+  }
+
   /** Capped two-batch semantic intake then the full-recall SWEEP
     * ([[graft.similarity.SemanticDedupIndex.sweep]]) — the semantic
     * LSM story (ingest-fast at a hard candidate bound / compact-
@@ -254,39 +270,9 @@ object VectorOps {
     * the per-bucket-ranked capped intake, the sweep's escalation
     * ladder at the production cap, cosine verification and recursive
     * min-propagation. */
-  /** The two-batch [[SemanticSweepCap]] intake STATE, built ONCE per
-    * (session, dir) through the REAL capped-ingest machinery — the
-    * standing index the semantic sweep-cadence pair (q_semantic_sweep /
-    * q_semantic_sweep_decision) reads. Same rationale and discipline as
-    * [[MediaDedup.sweepDemoIntake]]: in production the LSM triad's
-    * verbs operate on ONE standing index; each graded verb still runs
-    * end-to-end on a private replica seeded from this state (the sweep
-    * mutates its index), and both sweep and decision are pure functions
-    * of the stored rows, so the replica is output-identical. */
-  private val semIntakeMemo = new graft.operators.SessionMemo[DataFrame]
-  private def semanticSweepIntake(s: SparkSession, dir: String): DataFrame =
-    semIntakeMemo.getOrCompute(s, dir)(df => (df.sparkSession eq s) &&
-      graft.operators.SessionMemo.checkpointLive(df)) {
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      graft.load.Scratch.withScratch("graft_semintake_q", dir) { tmp =>
-        val idx = new graft.similarity.SemanticDedupIndex(
-          s, tmp.getAbsolutePath, threshold = 0.2,
-          sketch = graft.similarity.SemanticSketch(
-            maxCandidatesPerVector = SemanticSweepCap))
-        idx.ingest(emb.filter(col("vec_id") < 250))
-        idx.ingest(emb.filter(col("vec_id") >= 250))
-        graft.operators.SessionMemo.nameCheckpoint(
-          idx.vectors.localCheckpoint(), s"graft.memo.semIntake:$dir")
-      }
-    }
-
   def semanticSweep(s: SparkSession, dir: String): DataFrame =
     graft.load.Scratch.withScratch("graft_semsweep_q", dir) { tmp =>
-      val idx = new graft.similarity.SemanticDedupIndex(
-        s, tmp.getAbsolutePath, threshold = 0.2,
-        sketch = graft.similarity.SemanticSketch(
-          maxCandidatesPerVector = SemanticSweepCap))
-      idx.seedBatch(semanticSweepIntake(s, dir))
+      val idx = semanticSweepIntake(s, dir, tmp)
       idx.sweep()
       idx.vectors.select(col("vec_id"),
         when(col("vec_id") < 250, 1L).otherwise(2L).as("arrival_batch"))
@@ -437,12 +423,7 @@ object VectorOps {
     * (recommended), clean at the production budget. */
   def semanticSweepDecision(s: SparkSession, dir: String): DataFrame =
     graft.load.Scratch.withScratch("graft_semdec_q", dir) { tmp =>
-      val idx = new graft.similarity.SemanticDedupIndex(
-        s, tmp.getAbsolutePath, threshold = 0.2,
-        sketch = graft.similarity.SemanticSketch(
-          maxCandidatesPerVector = SemanticSweepCap))
-      idx.seedBatch(semanticSweepIntake(s, dir))
-      idx.sweepDecision(SemanticSweepCap).localCheckpoint()
+      semanticSweepIntake(s, dir, tmp).sweepDecision(SemanticSweepCap).localCheckpoint()
     }
 
   /** Replay: the capped-intake survivors ([[semanticIntakeCtes]]), one

@@ -106,6 +106,14 @@ object Versioned {
   private val T4 = 1711929600L // 2024-04-01T00:00:00Z
   private val T5 = 1714521600L // 2024-05-01T00:00:00Z
 
+  /** Batch 3 of the three-batch lifecycle: [200,250) at T4 with
+    * `hasLang` forced to `newlang` (its `hasSource` rows extend, its
+    * `hasLang` rows deprecate + refresh). */
+  private def thirdBatch(s: SparkSession, dir: String): DataFrame =
+    batch(
+      t(s, dir, "documents").filter(col("doc_id") >= 200 && col("doc_id") < 250),
+      lit("newlang"), lit(T4))
+
   /** The delta-layout lifecycle, oracle-graded end-to-end: after the
     * two-batch load the store COMPACTS (keep=1 — the full state
     * materializes as a `base=` snapshot and every delta dir is dropped),
@@ -117,18 +125,9 @@ object Versioned {
     * latest-writer-wins window hash-mismatches against a pure-SQL
     * three-batch MERGE restatement. */
   def versionCompacted(s: SparkSession, dir: String): DataFrame = {
-    val b3 = batch(
-      t(s, dir, "documents").filter(col("doc_id") >= 200 && col("doc_id") < 250),
-      lit("newlang"), lit(T4))
-    // compaction + merge-on-base continue from the session-shared
-    // two-merge state on a private replica (the verb mutates), replicated
-    // through the store's own commit protocol ([[TripletStore.replicateTo]]
-    // — committed levels + durable markers only, never a claim marker or
-    // tmp garbage), not a raw dir copy
-    val root = mergedDefaultStoreRoot(s, dir)
+    val b3 = thirdBatch(s, dir)
     Scratch.withScratch("graft_vc_q", dir) { tmp =>
-      new TripletStore(s, root.getAbsolutePath).replicateTo(tmp)
-      val store = new TripletStore(s, tmp.getAbsolutePath)
+      val store = twoMergeStore(s, dir, new TripletStore(s, tmp.getAbsolutePath))
       store.compact(keep = 1)
       store.merge(b3, new Timestamp(T5 * 1000))
       store.ranges.select(col("subject"), col("predicate"), col("obj"),
@@ -282,16 +281,9 @@ object Versioned {
     * below-horizon THROW and horizon monotonicity are spec-pinned in
     * TripletStoreSpec; a refusal cannot be a DataFrame row.) */
   def versionTtl(s: SparkSession, dir: String): DataFrame = {
-    val b3 = batch(
-      t(s, dir, "documents").filter(col("doc_id") >= 200 && col("doc_id") < 250),
-      lit("newlang"), lit(T4))
-    // third merge + retention continue from the session-shared
-    // two-merge state on a private replica (the verb mutates), via the
-    // store's commit-protocol replication (see versionCompacted)
-    val root = mergedDefaultStoreRoot(s, dir)
+    val b3 = thirdBatch(s, dir)
     Scratch.withScratch("graft_vt_q", dir) { tmp =>
-      new TripletStore(s, root.getAbsolutePath).replicateTo(tmp)
-      val store = new TripletStore(s, tmp.getAbsolutePath)
+      val store = twoMergeStore(s, dir, new TripletStore(s, tmp.getAbsolutePath))
       store.merge(b3, new Timestamp(T5 * 1000))
       store.compact(olderThan = new Timestamp(T4 * 1000))
       store.ranges.select(col("subject"), col("predicate"), col("obj"),
@@ -323,49 +315,9 @@ object Versioned {
     * batch-mode `now` arguments. Any drift between the streaming path
     * and batch semantics — micro-batch ordering, foreachBatch state,
     * compaction inside the stream — hash-mismatches here. */
-  /** The three fixture INPUT FILES staged once per (session, dir) — r16,
-    * guide §6 on the stream's non-graded scaffolding: the three
-    * `coalesce(1).write.parquet` jobs wrote byte-identical fixture files
-    * per invocation (pure input staging, ~3 full batch computations
-    * before the stream even starts). The stream, its store, and its
-    * checkpoint stay fully PRIVATE per invocation — only the input bytes
-    * are shared, copied driver-side into each run's own in-dir in the
-    * same arrival order. */
-  private val streamInputMemo = new graft.operators.SessionMemo[java.io.File]
-  private def stagedStreamInputs(s: SparkSession, dir: String): java.io.File =
-    streamInputMemo.getOrCompute(s, dir)(
-      f => (1 to 3).forall(i =>
-        new java.io.File(new java.io.File(f, s"b$i"), "_SUCCESS").exists())) {
-      val tmp = Scratch.dir("graft_sm_in", dir)
-      sharedStoreDirs.add(tmp)
-      val (b1, b2) = fixtureBatches(s, dir)
-      val b3 = batch(
-        t(s, dir, "documents").filter(col("doc_id") >= 200 && col("doc_id") < 250),
-        lit("newlang"), lit(T4))
-      Seq("b1" -> b1, "b2" -> b2, "b3" -> b3).foreach { case (n, b) =>
-        b.coalesce(1).write.mode("overwrite")
-          .parquet(new java.io.File(tmp, n).getAbsolutePath)
-      }
-      tmp
-    }
-
-  /** Copy one staged batch's data files into the stream's in-dir (the
-    * `mode("append")` drop, minus the recomputation): data files only —
-    * `_SUCCESS`/hidden files are source-ignored anyway — with their
-    * staged names (part-file UUIDs are globally unique, so drops never
-    * collide). */
-  private def dropStaged(staged: java.io.File, n: String, inDir: String): Unit = {
-    val dst = new java.io.File(inDir)
-    dst.mkdirs()
-    Option(new java.io.File(staged, n).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && !f.getName.startsWith("_") &&
-        !f.getName.startsWith("."))
-      .foreach(f => java.nio.file.Files.copy(f.toPath,
-        new java.io.File(dst, f.getName).toPath))
-  }
-
   def streamMerge(s: SparkSession, dir: String): DataFrame = {
-    val staged = stagedStreamInputs(s, dir)
+    val (b1, b2) = fixtureBatches(s, dir)
+    val b3 = thirdBatch(s, dir)
     Scratch.withScratch("graft_sm_q", dir) { tmp =>
       val inDir = new java.io.File(tmp, "in").getAbsolutePath
       val ckDir = new java.io.File(tmp, "ck").getAbsolutePath
@@ -373,14 +325,15 @@ object Versioned {
         autoCompactEvery = 1, autoCompactKeep = 1)
       // one file per logical batch; processAllAvailable between drops
       // pins the arrival order regardless of file-listing tiebreaks
-      dropStaged(staged, "b1", inDir)
+      def drop(b: DataFrame): Unit = b.coalesce(1).write.mode("append").parquet(inDir)
+      drop(b1)
       val q = graft.streaming.StreamingLoad.start(
         graft.streaming.StreamingLoad.readTripleStream(s, inDir), store, ckDir)
       try {
         q.processAllAvailable()
-        dropStaged(staged, "b2", inDir)
+        drop(b2)
         q.processAllAvailable()
-        dropStaged(staged, "b3", inDir)
+        drop(b3)
         q.processAllAvailable()
       } finally q.stop()
       store.ranges.select(col("subject"), col("predicate"), col("obj"),
@@ -403,96 +356,39 @@ object Versioned {
   private val LookupSubjects =
     Seq("doc:42", "doc:103", "doc:105", "doc:350", "doc:99999")
 
+  /** Merge the two fixture batches (b1@T1, b2@T3) into `store`, an empty
+    * store in the caller's scratch dir, and return it. */
+  private def twoMergeStore(s: SparkSession, dir: String,
+                            store: TripletStore): TripletStore = {
+    val (b1, b2) = fixtureBatches(s, dir)
+    store.merge(b1, new Timestamp(T1 * 1000))
+    store.merge(b2, new Timestamp(T3 * 1000))
+    store
+  }
+
+  /** Build the two-merge fixture state in a private scratch BUCKETED
+    * store and hand it to `body` — the five read-only verbs over that
+    * state (history, delta, the two-probe as-of, and the two point
+    * lookups). `bucketMinRows = 1` engages the bucketed layout at
+    * fixture scale (by default only lake-sized levels bucket);
+    * `subjectBuckets = 8` (not the 64 floor) keeps the per-level
+    * dir+file fan-out small while the five lookup subjects still span
+    * several buckets. The read verbs' rows are layout-independent
+    * (bucketing is physical placement only). `body` must checkpoint
+    * its result: the dir is removed when it returns. */
+  private def withFixtureStore[T](s: SparkSession, dir: String)
+                                 (body: TripletStore => T): T =
+    Scratch.withScratch("graft_lk_q", dir) { tmp =>
+      body(twoMergeStore(s, dir, new TripletStore(s, tmp.getAbsolutePath,
+        bucketMinRows = 1L, subjectBuckets = 8)))
+    }
+
   /** V8 point lookup graded end-to-end — the reference's hash index on
     * subject (`init.sql:28-38`) as an engine verb: the two-batch fixture
-    * loads into a scratch store built with `bucketMinRows = 1` (the
-    * bucketed layout engages at fixture scale; by default only
-    * lake-sized levels bucket), then
+    * loads into a scratch bucketed store ([[withFixtureStore]]), then
     * [[graft.load.TripletStore.currentTriplesFor]] reads exactly the
     * five [[LookupSubjects]] through the bucket-pruned level scan —
     * PartitionFilters on every bucketed level, PlanSpec-pinned. */
-  /** Load the two-batch fixture into a scratch BUCKETED store and hand
-    * it to `body` — shared by the FIVE read-only verbs over the
-    * two-merge state (history, delta, the two-probe as-of, and the two
-    * point lookups). `subjectBuckets = 8` (not the 64 floor): the
-    * instrument's cost is store construction, and with
-    * `bucketMinRows = 1` every level fans out one dir+file per touched
-    * bucket — 8 buckets cut that 8x while still proving multi-bucket
-    * pruning (the five lookup subjects span several of the 8).
-    *
-    * The store itself BUILDS ONCE per (session, dir) — the same
-    * memoization the media family's decode got
-    * ([[MediaDedup.corpusSignatures]]): r14 shared it between the two
-    * lookup verbs (~3 s of pure instrument cost recovered per bench
-    * sweep); r15 extends it to versionHistory / versionDelta /
-    * versionAsOf, which each rebuilt an IDENTICAL two-merge fixture
-    * store per invocation (~1.2 s apiece of pure instrument cost),
-    * while in production every one of these verbs reads a store that
-    * already exists. Each verb's READ stays end-to-end (full
-    * reconstruction for ranges/delta/as-of; bucket-pruned
-    * literal-pushdown scans for the lookups) — only the fixture build
-    * is shared, and the mutating verbs (compaction, TTL, the streaming
-    * load) still build private stores. The read
-    * verbs' rows are layout-independent by construction (bucketing is
-    * physical placement only; q_subject_lookup's oracle pinned that in
-    * r13). The scratch dir outlives the query and is removed by a JVM
-    * shutdown hook; a swept/deleted dir re-builds. */
-  private val lookupStoreMemo = new graft.operators.SessionMemo[java.io.File]
-
-  // ONE shutdown hook sweeping a registry instead of a hook per build:
-  // a long-lived JVM cycling sessions would otherwise grow the hook set
-  // (and each superseded dir lives until exit regardless — ~100 KB per
-  // (session, dir), removed here in one pass). Holds EVERY session-shared
-  // store root this object memoizes: the lookup-verb bucketed fixture
-  // store AND the default-geometry merged store the mutating verbs copy
-  // from.
-  private val sharedStoreDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
-  sys.addShutdownHook {
-    sharedStoreDirs.forEach(d => Scratch.rm(d))
-  }
-
-  private def fixtureStoreRoot(s: SparkSession, dir: String): java.io.File =
-    lookupStoreMemo.getOrCompute(s, dir)(
-      f => new java.io.File(f, TripletStore.FormatMarker).exists()) {
-      val tmp = Scratch.dir("graft_lk_q", dir)
-      sharedStoreDirs.add(tmp)
-      val (b1, b2) = fixtureBatches(s, dir)
-      val store = new TripletStore(s, tmp.getAbsolutePath,
-        bucketMinRows = 1L, subjectBuckets = 8)
-      store.merge(b1, new Timestamp(T1 * 1000))
-      store.merge(b2, new Timestamp(T3 * 1000))
-      tmp
-    }
-
-  private def withFixtureStore[T](s: SparkSession, dir: String)
-                                 (body: TripletStore => T): T =
-    body(new TripletStore(s, fixtureStoreRoot(s, dir).getAbsolutePath,
-      bucketMinRows = 1L, subjectBuckets = 8))
-
-  /** The DEFAULT-geometry two-merge state (b1@T1, b2@T3 under a plain
-    * `new TripletStore(s, path)`) shared by the two mutating retention
-    * verbs: q_version_compacted and q_version_ttl each continue from
-    * this exact state with their own compaction/merge tail. Built once
-    * per (session, dir) like [[fixtureStoreRoot]]; each verb MUTATES its
-    * store, so it runs on a private dir-copy replica
-    * ([[Scratch.copyDir]] — the store layout is self-contained, so the
-    * copy is byte-identical and the continuation reads precisely the
-    * state a private rebuild would have produced). The streaming load
-    * (q_stream_merge) keeps its private store: the stream IS its verb. */
-  private val mergedStoreMemo = new graft.operators.SessionMemo[java.io.File]
-  private def mergedDefaultStoreRoot(s: SparkSession, dir: String): java.io.File =
-    mergedStoreMemo.getOrCompute(s, dir)(
-      f => new java.io.File(f, TripletStore.FormatMarker).exists()) {
-      val tmp = Scratch.dir("graft_vm_q", dir)
-      sharedStoreDirs.add(tmp)
-      val (b1, b2) = fixtureBatches(s, dir)
-      val store = new TripletStore(s, tmp.getAbsolutePath)
-      store.merge(b1, new Timestamp(T1 * 1000))
-      store.merge(b2, new Timestamp(T3 * 1000))
-      tmp
-    }
-
   def subjectLookup(s: SparkSession, dir: String): DataFrame =
     withFixtureStore(s, dir) { store =>
       store.currentTriplesFor(LookupSubjects)

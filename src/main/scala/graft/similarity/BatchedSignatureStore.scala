@@ -271,20 +271,6 @@ abstract class BatchedSignatureStore(spark: SparkSession, path: String) {
       graft.load.AtomicDirCommit.commit(tmp, new java.io.File(root, s"b=$next"))
     }
 
-  /** Adopt externally-computed survivor rows as ONE committed batch —
-    * the state-replication seam for instruments whose maintenance verbs
-    * share a standing intake state (the LSM triad's measure / decide /
-    * act all operate on ONE standing index in production; the graded
-    * sweep and sweep-decision rows seed a private replica from the
-    * session-shared intake state instead of re-running the identical
-    * two-batch intake per verb). NO acceptance logic runs here: the
-    * rows must already satisfy the subclass's invariants — i.e. they
-    * came out of a real intake of this store class at the same
-    * parameters. Every maintenance/read verb is a pure function of the
-    * stored rows (never of the batch-dir split), so a seeded replica is
-    * verb-for-verb output-identical to the store the rows came from. */
-  private[graft] def seedBatch(rows: DataFrame): Unit = append(rows, 1L)
-
   /** Rewrite all committed batches into one directory — after many small
     * ingests the per-batch layout pays a directory listing and file-open
     * per batch on every read. Crash-safe in both directions: the pending

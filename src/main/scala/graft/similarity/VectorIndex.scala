@@ -61,7 +61,8 @@ class VectorIndex(spark: SparkSession, path: String,
       rows.map(_.map(java.lang.Double.toString).mkString(",")).mkString("\n"))
 
   private def readLines(f: java.io.File): Array[Array[Double]] =
-    VectorIndex.parseModelLines(Files.readString(f.toPath))
+    Files.readString(f.toPath).split("\n")
+      .map(_.split(",").map(java.lang.Double.parseDouble))
 
   /** Frozen models, present once the first batch landed. */
   def models: Option[(IvfIndex.Model, Sq8Model)] =
@@ -69,25 +70,6 @@ class VectorIndex(spark: SparkSession, path: String,
       val s = readLines(sq8File)
       Some((IvfIndex.Model(readLines(ivfFile)), Sq8Model(s(0), s(1))))
     } else None
-
-  /** The frozen model files' exact text — the state-replication seam's
-    * model half (rows ride [[BatchedSignatureStore.seedBatch]]). The
-    * codec's persistence is an exact text roundtrip by design
-    * ([[writeLines]]/[[readLines]] via `Double.toString`/`parseDouble`),
-    * so carrying the TEXT reproduces the models bit-identically. */
-  private[graft] def modelTexts: (String, String) =
-    (Files.readString(ivfFile.toPath), Files.readString(sq8File.toPath))
-
-  /** Adopt externally-fit frozen models verbatim — the model half of the
-    * seeded-replica seam ([[BatchedSignatureStore.seedBatch]] doc): the
-    * texts must have come out of a real intake of this class at the same
-    * parameters ([[modelTexts]]), so the replica's models are
-    * bit-identical to the store they came from. */
-  private[graft] def seedModels(ivfText: String, sq8Text: String): Unit = {
-    storageRoot.mkdirs()
-    Files.writeString(ivfFile.toPath, ivfText)
-    Files.writeString(sq8File.toPath, sq8Text)
-  }
 
   private def fitOrLoad(emb: DataFrame): (IvfIndex.Model, Sq8Model) =
     models.getOrElse {
@@ -414,23 +396,6 @@ object VectorIndex {
   val rowSchema: StructType = StructType(Seq(
     StructField("vec_id", LongType), StructField("cell", IntegerType),
     StructField("sq8_codes", BinaryType), StructField("dn", DoubleType)))
-
-  /** Parse [[VectorIndex.modelTexts]] back into models without a store —
-    * for read-only instruments that measure against the frozen models and
-    * never touch the code table (the same exact text roundtrip the
-    * on-disk files make). */
-  private[graft] def parseModelTexts(ivfText: String,
-                                     sq8Text: String): (IvfIndex.Model, Sq8Model) = {
-    val s = parseModelLines(sq8Text)
-    (IvfIndex.Model(parseModelLines(ivfText)), Sq8Model(s(0), s(1)))
-  }
-
-  /** The ONE text -> rows parser of the exact-roundtrip model format —
-    * shared by the instance read path ([[VectorIndex!.models]]) and the
-    * storeless [[parseModelTexts]], so a format change in
-    * writeLines/readLines cannot silently drift the two apart. */
-  private[similarity] def parseModelLines(t: String): Array[Array[Double]] =
-    t.split("\n").map(_.split(",").map(java.lang.Double.parseDouble))
 
   /** What [[VectorIndex.maintainIfDrifted]] measured and did: the two
     * drift instruments, which acts fired, and the artifact generation

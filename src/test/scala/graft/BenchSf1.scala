@@ -92,9 +92,10 @@ object BenchSf1 {
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, dir).count()
         val dt = (System.nanoTime() - t0) / 1e9
-        // same memo exemption as graft.Bench: session-lived graft.memo.*
-        // checkpoints (the media decode-once table) survive the per-run
-        // sweep; everything else a finished run pinned is dropped
+        // same memo exemption as graft.Bench: the session-lived
+        // graft.memo.* checkpoints (the decoded media signatures and the
+        // sampled co-purchase edges) survive the per-run sweep;
+        // everything else a finished run pinned is dropped
         spark.sparkContext.getPersistentRDDs.values
           .filterNot(r => Option(r.name).exists(_.startsWith("graft.memo.")))
           .foreach(_.unpersist(false))

@@ -44,21 +44,23 @@ class DocCountsSpec extends AnyFunSuite {
 
   test("COVERAGE.md final-surface count matches the shipped surface") {
     val cov = read("COVERAGE.md")
-    val p = "final surface: (\\d+) oracle-paired queries\\*\\* \\((\\d+) → (\\d+); \\+(\\d+)".r
+    val p = ("final surface: (\\d+) oracle-paired queries\\*\\* " +
+      "\\((\\d+) → (\\d+); ([+−-])(\\d+)").r
     val ms = p.findAllMatchIn(cov).toList
     assert(ms.nonEmpty, "COVERAGE.md no longer contains the " +
-      "'final surface: N oracle-paired queries (A → B; +C' phrase — " +
+      "'final surface: N oracle-paired queries (A → B; ±C' phrase — " +
       "update this spec along with the phrasing")
-    // the NEWEST round's line must equal the live surface and its
-    // delta arithmetic must be internally consistent; older rounds'
-    // lines only need consistent arithmetic
-    val newest = ms.maxBy(_.group(1).toInt)
+    // the NEWEST line — the last one in file order, so a change that
+    // removes queries can record a drop — must equal the live surface;
+    // every line's signed delta arithmetic must be internally consistent
+    val newest = ms.last
     assert(newest.group(1).toInt == n,
-      s"COVERAGE.md newest final-surface says ${newest.group(1)}, surface is $n")
+      s"COVERAGE.md newest final-surface says ${newest.group(1)}, surface is $n " +
+        s"(phrase: '${newest.matched}')")
     ms.foreach { m =>
-      val (total, from, to, plus) =
-        (m.group(1).toInt, m.group(2).toInt, m.group(3).toInt, m.group(4).toInt)
-      assert(total == to && to - from == plus,
+      val (total, from, to) = (m.group(1).toInt, m.group(2).toInt, m.group(3).toInt)
+      val delta = if (m.group(4) == "+") m.group(5).toInt else -m.group(5).toInt
+      assert(total == to && to - from == delta,
         s"COVERAGE.md surface line arithmetic broken: '${m.matched}'")
     }
   }

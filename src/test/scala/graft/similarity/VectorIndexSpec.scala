@@ -97,45 +97,6 @@ class VectorIndexSpec extends AnyFunSuite {
       .as[(Long, Long, Double)].collect().toSet == before)
   }
 
-  test("seeded replica (rows + model texts) is verb-for-verb identical to the real two-batch store") {
-    val corpus = emb.filter($"vec_id" >= 10)
-    val direct = new VectorIndex(spark,
-      Files.createTempDirectory("vidx_seed_src").toString)
-    direct.ingest(corpus.filter($"vec_id" % 2 === 0))
-    direct.ingest(corpus.filter($"vec_id" % 2 =!= 0))
-
-    // the state-replication seam the memoized intakes ride: rows via
-    // seedBatch, models via the exact-text roundtrip
-    val (ivfT, sq8T) = direct.modelTexts
-    val replica = new VectorIndex(spark,
-      Files.createTempDirectory("vidx_seed_rep").toString)
-    replica.seedModels(ivfT, sq8T)
-    replica.seedBatch(direct.table)
-
-    assert(rows(replica) == rows(direct))
-    val (di, ds) = direct.models.get
-    val (ri, rs) = replica.models.get
-    assert(ri.centroids.map(_.toSeq).toSeq == di.centroids.map(_.toSeq).toSeq)
-    assert(rs.mins.toSeq == ds.mins.toSeq && rs.maxs.toSeq == ds.maxs.toSeq)
-    // parseModelTexts (the storeless read-only path) sees the same models
-    val (pi, ps) = VectorIndex.parseModelTexts(ivfT, sq8T)
-    assert(pi.centroids.map(_.toSeq).toSeq == di.centroids.map(_.toSeq).toSeq)
-    assert(ps.mins.toSeq == ds.mins.toSeq && ps.maxs.toSeq == ds.maxs.toSeq)
-
-    val queries = emb.filter($"vec_id" < 5)
-    def top(i: VectorIndex) = i.search(queries, 5, 2)
-      .select($"query_id", $"neighbor_id", round($"cos", 4).as("cos"))
-      .as[(Long, Long, Double)].collect().toSet
-    assert(top(replica) == top(direct))
-
-    // the MUTATING verb on the replica: rebuild refits on the corpus and
-    // swaps a fresh generation — identical rows and search afterwards
-    direct.rebuild(corpus)
-    replica.rebuild(corpus)
-    assert(rows(replica) == rows(direct))
-    assert(top(replica) == top(direct))
-  }
-
   test("codecDrift flags a shifted batch, stays quiet in-distribution") {
     val idx = new VectorIndex(spark, Files.createTempDirectory("vidx_d").toString)
     idx.ingest(emb)
