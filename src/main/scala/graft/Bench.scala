@@ -24,21 +24,9 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      // r16 (guide §2.2, r15 verdict item 2 — 32-core anti-scaling): AQE's
-      // parallelism-first coalescing floors post-shuffle partitions at
-      // 1 MB, so a 17 MB shuffle at 32 cores still schedules ~17-32
-      // near-empty reduce tasks whose dispatch cost dominates at this SF
-      // (measured: the whole suite ran 1.31x slower at 32 cores than 8 in
-      // BENCH_r15_c8, GC 1-2% at both counts — it is task overhead, not
-      // memory). A 2 MB byte floor was adopted mid-r16 on a coarse probe
-      // (165.9 -> 158.9 total with the equivalent arm), then adjudicated
-      // with two dedicated interleaved A/Bs of the floor ITSELF
-      // (tools/floor_ab_r16.json, tools/floor_full_ab_r16.json): full-
-      // suite net 1.015 (neutral) while consistently costing the CPU-
-      // dense mid-size shuffles 1.2-1.3x (q_pagerank 1.28, q_containment
-      // 1.27) — bytes under-estimate CPU, which is why parallelism-first
-      // is Spark's default. Reverted: the session keeps Spark's default
-      // 1 MB floor.
+      // Spark's default AQE coalescing (parallelism first, 1 MB floor): a
+      // 2 MB floor measured neutral on the whole suite and 1.2-1.3x slower
+      // on CPU-dense mid-size shuffles (q_pagerank, q_containment).
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -19,6 +19,10 @@ import graft.extract.SchemaPropertyExtractor.{PropertyQuery, ScoringBackend}
   *   schema properties (E8) → ONE LONG-FORMAT property table with
   *   per-fact provenance.
   *
+  * One pass, like the reference: the known fields, tag buckets and YAML
+  * facts are one [[LongFormat.unpivot]] projection, unioned only with the
+  * E8 arm — two snapshot scans per call, not one per property.
+  *
   * The reference keeps 45 wide columns whose cells are lists of
   * provenance dicts; the engine's native shape is the long format
   * (modelId, property, value, method, confidence) — columnar-friendly,
@@ -26,24 +30,36 @@ import graft.extract.SchemaPropertyExtractor.{PropertyQuery, ScoringBackend}
   */
 object ModelCardPipeline {
 
-  final case class Provenanced(method: String, confidence: Double)
+  /** The two YAML front-matter facts (Y1) of one card. */
+  final case class YamlFacts(license: String, conditionsOfAccess: String)
 
-  private def longFormat(df: DataFrame, property: String, value: org.apache.spark.sql.Column,
-                         method: String, confidence: Double): DataFrame =
-    df.select(
-      col("modelId"),
-      lit(property).as("property"),
-      value.cast("string").as("value"),
-      lit(method).as("method"),
-      lit(confidence).as("confidence"))
-      .filter(col("value").isNotNull && col("value") =!= "")
+  // one front-matter parse per card serves both YAML facts
+  private val frontMatter = udf { card: String =>
+    val fm = FrontMatter.parse(Option(card).getOrElse(""))
+    YamlFacts(FrontMatter.license(fm).orNull,
+      FrontMatter.conditionsOfAccess(fm).orNull)
+  }
 
-  private val fmLicense = udf { card: String =>
-    FrontMatter.license(FrontMatter.parse(Option(card).getOrElse(""))).orNull
-  }
-  private val fmGated = udf { card: String =>
-    FrontMatter.conditionsOfAccess(FrontMatter.parse(Option(card).getOrElse(""))).orNull
-  }
+  private val knownCols = Seq(
+    "schema.org:name" -> "name",
+    "schema.org:identifier" -> "identifier",
+    "fair4ml:sharedBy" -> "shared_by",
+    "schema.org:dateCreated" -> "date_created",
+    "schema.org:datePublished" -> "date_published",
+    "schema.org:dateModified" -> "date_modified",
+    "schema.org:url" -> "model_url",
+    "schema.org:discussionUrl" -> "discussion_url",
+    "codemeta:readme" -> "readme_url",
+    "schema.org:description" -> "description")
+
+  private val tagCols = Seq(
+    "fair4ml:trainedOn" -> "trained_on",
+    "fair4ml:evaluatedOn" -> "evaluated_on",
+    "codemeta:referencePublication" -> "reference_publication",
+    "fair4ml:fineTunedFrom" -> "fine_tuned_from",
+    "schema.org:inLanguage" -> "in_language",
+    "fair4ml:mlTask" -> "ml_task",
+    "schema.org:keywords" -> "keywords")
 
   /** @param snapshot raw HF snapshot schema (FIXTURES.md §1)
     * @param vocabs   tag vocabularies
@@ -62,52 +78,26 @@ object ModelCardPipeline {
                  inference: QaEngine.InferenceBackend =
                    new QaEngine.EchoBackend): DataFrame = {
     val filtered = QualityFilter(snapshot)
-    val known = KnownFields(filtered)
-    val tagged = TagCategorizer.categorize(known, vocabs)
+    val tagged = TagCategorizer.categorize(KnownFields(filtered), vocabs)
+      .withColumn("yaml", frontMatter(col("card")))
 
-    val knownMethod = "Parsed_from_HF_dataset"
-    val knownCols = Seq(
-      "schema.org:name" -> "name",
-      "schema.org:identifier" -> "identifier",
-      "fair4ml:sharedBy" -> "shared_by",
-      "schema.org:dateCreated" -> "date_created",
-      "schema.org:datePublished" -> "date_published",
-      "schema.org:dateModified" -> "date_modified",
-      "schema.org:url" -> "model_url",
-      "schema.org:discussionUrl" -> "discussion_url",
-      "codemeta:readme" -> "readme_url",
-      "schema.org:description" -> "description")
-    val knownRows = knownCols.map { case (prop, c) =>
-      longFormat(known, prop, col(c), knownMethod, 1.0)
-    }.reduce(_ unionByName _)
-
-    val tagMethod = "Parsed_from_HF_tags"
-    val tagCols = Seq(
-      "fair4ml:trainedOn" -> "trained_on",
-      "fair4ml:evaluatedOn" -> "evaluated_on",
-      "codemeta:referencePublication" -> "reference_publication",
-      "fair4ml:fineTunedFrom" -> "fine_tuned_from",
-      "schema.org:inLanguage" -> "in_language",
-      "fair4ml:mlTask" -> "ml_task",
-      "schema.org:keywords" -> "keywords")
-    val tagRows = tagCols.map { case (prop, c) =>
-      longFormat(tagged.select(col("modelId"), explode(col(c)).as("v")),
-        prop, col("v"), tagMethod, 1.0)
-    }.reduce(_ unionByName _)
-
-    val yamlMethod = "Parsed_from_YAML"
-    val yamlRows =
-      longFormat(filtered, "schema.org:license", fmLicense(col("card")), yamlMethod, 1.0)
-        .unionByName(longFormat(filtered, "schema.org:conditionsOfAccess",
-          fmGated(col("card")), yamlMethod, 1.0))
+    val one = lit(1.0)
+    val knownMethod = lit("Parsed_from_HF_dataset")
+    val tagMethod = lit("Parsed_from_HF_tags")
+    val yamlMethod = lit("Parsed_from_YAML")
+    val parsed = LongFormat.unpivot(tagged, col("modelId"),
+      knownCols.map { case (p, c) => LongFormat.scalar(p, col(c), knownMethod, one) } ++
+        tagCols.map { case (p, c) =>
+          LongFormat.elements(col(c))(v => LongFormat.fact(p, v, tagMethod, one)) } ++
+        Seq(LongFormat.scalar("schema.org:license", col("yaml.license"), yamlMethod, one),
+          LongFormat.scalar("schema.org:conditionsOfAccess",
+            col("yaml.conditionsOfAccess"), yamlMethod, one)))
 
     val matched = SchemaPropertyExtractor
       .extract(filtered, schemaQueries, backend, strategy, inference)
-      .toDF()
-      .select(col("modelId"), col("property"), col("value").as("value"),
-        col("method"), col("confidence"))
+      .toDF().select("modelId", "property", "value", "method", "confidence")
 
-    knownRows.unionByName(tagRows).unionByName(yamlRows).unionByName(matched)
+    parsed.unionByName(matched)
   }
 
   /** Property table → (triples, statement metadata), subjects by entity

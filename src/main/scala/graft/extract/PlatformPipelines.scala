@@ -17,7 +17,8 @@ import graft.extract.SchemaMapping.Rule
   *
   * Output is the engine's long-format provenance property table, the same
   * shape ModelCardPipeline emits — all three platforms converge before the
-  * triple builder.
+  * triple builder. Each property table is one [[LongFormat.unpivot]] pass
+  * over the record set, however many properties the mapping has.
   */
 object PlatformPipelines {
 
@@ -39,20 +40,13 @@ object PlatformPipelines {
     }: _*)
   }
 
-  /** Long-format property table from a mapped record set. */
+  /** Long-format property table from a mapped record set: every non-id
+    * column is one property, all in one [[LongFormat.unpivot]] projection. */
   def toLongProperties(mapped: DataFrame, idColumn: String,
-                       method: String, confidence: Double): DataFrame = {
-    val props = mapped.columns.filterNot(_ == idColumn)
-    props.map { p =>
-      mapped.select(
-        col(idColumn).cast("string").as("modelId"),
-        lit(p).as("property"),
-        col(s"`$p`").cast("string").as("value"),
-        lit(method).as("method"),
-        lit(confidence).as("confidence"))
-        .filter(col("value").isNotNull && col("value") =!= "")
-    }.reduce(_ unionByName _)
-  }
+                       method: String, confidence: Double): DataFrame =
+    LongFormat.unpivot(mapped, col(idColumn).cast("string").as("modelId"),
+      mapped.columns.toSeq.filterNot(_ == idColumn).map(p =>
+        LongFormat.scalar(p, col(s"`$p`"), lit(method), lit(confidence))))
 
   /** §3.2 OpenML: rule mapping + J3 status lookup (broadcast dim with
     * scraped-status priority via coalesce). */
@@ -76,7 +70,7 @@ object PlatformPipelines {
     * prefers the scraped value over the API status AND records which
     * source won in the provenance method (`web_scraping` vs
     * `openml_python_package`, `:526-528`); downloads/likes/issues always
-    * carry `web_scraping`. `stats` is the
+    * carry `web_scraping`; a null count emits no fact. `stats` is the
     * [[graft.sources.StatsScraper]] output (id, status, downloads,
     * likes, issues, fetched); `apiStatus` the J3 dim (identifier,
     * api_status), broadcast — it is config-scale. Output rows union
@@ -90,21 +84,13 @@ object PlatformPipelines {
       case None => stats.withColumn("api_status", lit(null).cast("string"))
     }
     val scrapedWon = col("status") =!= "N/A"
-    val statusRows = withApi.select(
-      col("id").cast("string").as("modelId"),
-      lit("schema.org:status").as("property"),
-      coalesce(when(scrapedWon, col("status")), col("api_status"),
-        lit("N/A")).as("value"),
-      when(scrapedWon, lit("web_scraping"))
-        .otherwise(lit("openml_python_package")).as("method"),
-      lit(1.0).as("confidence"))
-    Seq("downloads", "likes", "issues").map { p =>
-      withApi.select(col("id").cast("string").as("modelId"),
-        lit(p).as("property"),
-        col(p).cast("string").as("value"),
-        lit("web_scraping").as("method"),
-        lit(1.0).as("confidence"))
-    }.foldLeft(statusRows)(_ unionByName _)
+    LongFormat.unpivot(withApi, col("id").cast("string").as("modelId"),
+      LongFormat.scalar("schema.org:status",
+        coalesce(when(scrapedWon, col("status")), col("api_status"), lit("N/A")),
+        when(scrapedWon, lit("web_scraping")).otherwise(lit("openml_python_package")),
+        lit(1.0)) +:
+        Seq("downloads", "likes", "issues").map(p =>
+          LongFormat.scalar(p, col(p), lit("web_scraping"), lit(1.0))))
   }
 
   /** T1 nested OpenML child-entity trees (`GraphBuilderFAIR4ML.py:350-415,

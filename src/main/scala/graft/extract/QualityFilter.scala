@@ -22,8 +22,8 @@ object QualityFilter {
     "## Technical Specifications", "## Model Card Contact")
 
   def occurrences(c: Column, needle: String): Column =
-    ((length(c) - length(regexp_replace(c,
-      java.util.regex.Pattern.quote(needle), ""))) / needle.length).cast("int")
+    ((length(c) - length(replace(c, lit(needle), lit("")))) / needle.length)
+      .cast("int")
 
   def indicatorHits(card: Column): Column =
     Indicators.map(p => when(card.contains(p), 1).otherwise(0)).reduce(_ + _)

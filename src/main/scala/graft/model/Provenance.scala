@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.extract.LongFormat
+
 /** The reference's provenance-wrapped wide format (SURVEY §1.1/§1.7): one
   * column per schema property, every cell a LIST of extraction records
   * `{data, extraction_method, confidence, extraction_time}` where `data`
@@ -60,21 +62,18 @@ object Provenance {
     }.drop("__m")
   }
 
-  /** Wide → long: explode every property column's cell list, unfolding the
-    * tagged variant back to one row per (id, property, scalar value). */
+  /** Wide → long: every property column's cells, unfolded from the tagged
+    * variant to one row per (id, property, scalar value), in one
+    * [[graft.extract.LongFormat.unpivot]] projection; null and empty
+    * values are dropped, as everywhere in the long format. */
   def wideToLong(wide: DataFrame, idCol: String, properties: Seq[String]): DataFrame =
-    properties.map { p =>
-      wide.select(col(idCol), explode_outer(col(s"`$p`")).as("cell"))
-        .select(
-          col(idCol),
-          lit(p).as("property"),
-          when(col("cell.data.kind") === "str", array(col("cell.data.data_str")))
-            .otherwise(col("cell.data.data_arr")).as("vals"),
-          col("cell.extraction_method").as("method"),
-          col("cell.confidence").as("confidence"),
-          col("cell.extraction_time").as("time"))
-        .select(col(idCol), col("property"), explode(col("vals")).as("value"),
-          col("method"), col("confidence"), col("time"))
-    }.reduce(_ unionByName _)
-      .filter(col("value").isNotNull)
+    LongFormat.unpivot(wide, col(idCol), properties.map { p =>
+      flatten(LongFormat.elements(col(s"`$p`")) { cell =>
+        val data = cell("data")
+        val vals = when(data("kind") === "str", array(data("data_str")))
+          .otherwise(data("data_arr"))
+        LongFormat.elements(vals)(v => LongFormat.fact(p, v, cell("extraction_method"),
+          cell("confidence"), cell("extraction_time").as("time")))
+      })
+    })
 }

@@ -149,6 +149,104 @@ class PipelineEndToEndSpec extends AnyFunSuite {
     assert(training.contains("curated corpus"))
   }
 
+  /** Edge rows for the one-pass laws: no front matter, a front-matter-only
+    * card (empty description), empty-string and null known fields, tags
+    * that are only prefixed, a pipeline_tag outside the vocabulary, and
+    * duplicate tags — plus the cards `snapshot` already filters out. */
+  private def edgeSnapshot = {
+    val bare = "# Plain card\nNo front matter here, only prose about training. " +
+      ("words " * 40)
+    val fmOnly = "---\nlicense: mit\nlicense_link: " + ("x" * 220) + "\n---"
+    snapshot(goodCard).union(Seq(
+      ("org/bare", "", tstamp("2024-01-02 00:00:00"), 1L, 0L, "transformers",
+        Seq("dataset:imdb", "arxiv:2001.1", "base_model:org/base"),
+        "robotics", null, bare),
+      ("org/fm-only", null, null, 1L, 0L, "transformers",
+        Seq("en", "en", "dataset:squad", "dataset:squad", "transformers",
+          "transformers", "Fill-Mask"),
+        "fill-mask", tstamp("2024-01-01 00:00:00"), fmOnly))
+      .toDF("modelId", "author", "last_modified", "downloads", "likes",
+        "library_name", "tags", "pipeline_tag", "createdAt", "card"))
+  }
+
+  test("properties == the arm-per-property reference, as a multiset") {
+    val snap = edgeSnapshot
+    // the oracle: one union arm per property, each a filtered projection
+    val filtered = QualityFilter(snap)
+    val tagged = graft.operators.TagCategorizer.categorize(KnownFields(filtered), vocabs)
+    def arm(df: org.apache.spark.sql.DataFrame, prop: String,
+            value: org.apache.spark.sql.Column, method: String) =
+      df.select(col("modelId"), lit(prop).as("property"),
+          value.cast("string").as("value"), lit(method).as("method"),
+          lit(1.0).as("confidence"))
+        .filter(col("value").isNotNull && col("value") =!= "")
+    val known = Seq("schema.org:name" -> "name", "schema.org:identifier" -> "identifier",
+      "fair4ml:sharedBy" -> "shared_by", "schema.org:dateCreated" -> "date_created",
+      "schema.org:datePublished" -> "date_published",
+      "schema.org:dateModified" -> "date_modified", "schema.org:url" -> "model_url",
+      "schema.org:discussionUrl" -> "discussion_url", "codemeta:readme" -> "readme_url",
+      "schema.org:description" -> "description")
+      .map { case (p, c) => arm(tagged, p, col(c), "Parsed_from_HF_dataset") }
+    val tags = Seq("fair4ml:trainedOn" -> "trained_on",
+      "fair4ml:evaluatedOn" -> "evaluated_on",
+      "codemeta:referencePublication" -> "reference_publication",
+      "fair4ml:fineTunedFrom" -> "fine_tuned_from", "schema.org:inLanguage" -> "in_language",
+      "fair4ml:mlTask" -> "ml_task", "schema.org:keywords" -> "keywords")
+      .map { case (p, c) =>
+        arm(tagged.select(col("modelId"), explode(col(c)).as("v")), p, col("v"),
+          "Parsed_from_HF_tags")
+      }
+    import graft.text.FrontMatter
+    val license = udf((c: String) => FrontMatter.license(FrontMatter.parse(c)).orNull)
+    val gated = udf((c: String) =>
+      FrontMatter.conditionsOfAccess(FrontMatter.parse(c)).orNull)
+    val yaml = Seq(
+      arm(filtered, "schema.org:license", license(col("card")), "Parsed_from_YAML"),
+      arm(filtered, "schema.org:conditionsOfAccess", gated(col("card")),
+        "Parsed_from_YAML"))
+    val matched = SchemaPropertyExtractor
+      .extract(filtered, queries, new TokenOverlapScorer).toDF()
+      .select("modelId", "property", "value", "method", "confidence")
+    val reference = (known ++ tags ++ yaml :+ matched).reduce(_ unionByName _)
+
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, String, String, String, Double)].collect()
+        .groupBy(identity).map { case (k, v) => k -> v.length }
+    val got = ModelCardPipeline.properties(snap, vocabs, new TokenOverlapScorer, queries)
+    val want = bag(reference)
+    assert(bag(got) == want)
+
+    // the fixture reaches every edge it was built for
+    val ids = want.keys.map(_._1).toSet
+    assert(ids == Set("org/model-one", "org/bare", "org/fm-only"))
+    def valuesOf(id: String, prop: String) =
+      want.keys.collect { case (`id`, `prop`, v, _, _) => v }.toSet
+    assert(valuesOf("org/bare", "schema.org:license").isEmpty)
+    assert(valuesOf("org/bare", "fair4ml:sharedBy").isEmpty)       // "" author
+    assert(valuesOf("org/fm-only", "fair4ml:sharedBy").isEmpty)    // null author
+    assert(valuesOf("org/fm-only", "schema.org:description").isEmpty)
+    assert(valuesOf("org/fm-only", "schema.org:license") == Set("mit"))
+    assert(valuesOf("org/bare", "fair4ml:mlTask").isEmpty)         // robotics
+    assert(valuesOf("org/bare", "fair4ml:fineTunedFrom") == Set("org/base"))
+    assert(want(("org/fm-only", "fair4ml:trainedOn", "squad", "Parsed_from_HF_tags",
+      1.0)) == 1)
+  }
+
+  test("properties scans the snapshot twice and parses front matter once") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val dir = Files.createTempDirectory("e2e_snapshot").resolve("snap").toString
+    edgeSnapshot.write.parquet(dir)
+    val props = ModelCardPipeline.properties(spark.read.parquet(dir), vocabs,
+      new TokenOverlapScorer, queries)
+    props.collect()
+    val nodes = graft.PlanWalk.walk(props.queryExecution.executedPlan)
+    // one scan for the parsed-fact arm, one for the context-match arm
+    assert(nodes.count(_.isInstanceOf[FileSourceScanExec]) == 2)
+    assert(nodes.flatMap(_.expressions).flatMap(_.collect { case u: ScalaUDF => u })
+      .size == 1)
+  }
+
   test("E8 dispatch: all three strategies, identical provenance wrapping") {
     import graft.extract.SchemaPropertyExtractor.Strategy
     val scorer = new TokenOverlapScorer

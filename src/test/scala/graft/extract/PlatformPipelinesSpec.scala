@@ -21,6 +21,35 @@ class PlatformPipelinesSpec extends AnyFunSuite {
     assert(flat.select("manifest_weights_format").as[String].head() == "torch")
   }
 
+  test("toLongProperties == the arm-per-column reference, as a multiset") {
+    val mapped = spark.read.json(Seq(
+      """{"id": 1, "name": "alpha", "score": 1.5, "ok": true, "tags": ["a", "b"]}""",
+      """{"id": 2, "name": "", "score": null, "ok": false, "tags": []}""",
+      """{"id": 3, "name": null, "score": 2, "tags": null}""",
+      """{"id": 3, "name": "alpha", "score": 2}""").toDS())
+      .select(col("id"), col("name"), col("score"), col("ok"), col("tags"),
+        col("score").cast("int").as("a.dotted"))
+    // the oracle: one filtered union arm per column
+    val reference = mapped.columns.filterNot(_ == "id").map { p =>
+      mapped.select(col("id").cast("string").as("modelId"), lit(p).as("property"),
+          col(s"`$p`").cast("string").as("value"), lit("m").as("method"),
+          lit(0.5).as("confidence"))
+        .filter(col("value").isNotNull && col("value") =!= "")
+    }.reduce(_ unionByName _)
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, String, String, String, Double)].collect()
+        .groupBy(identity).map { case (k, v) => k -> v.length }
+    val got = PlatformPipelines.toLongProperties(mapped, "id", "m", 0.5)
+    assert(got.columns.toSeq == Seq("modelId", "property", "value", "method", "confidence"))
+    val want = bag(reference)
+    assert(bag(got) == want)
+    // every column kind reached the table; null and "" never did
+    assert(want.keys.map(_._2).toSet == Set("name", "score", "ok", "tags", "a.dotted"))
+    assert(want(("3", "name", "alpha", "m", 0.5)) == 1)
+    assert(want(("3", "score", "2.0", "m", 0.5)) == 2)
+    assert(!want.keys.exists(f => f._1 == "2" && Set("name", "score")(f._2)))
+  }
+
   test("OpenML pipeline: mapping + status lookup with scraped priority") {
     val runs = spark.read.json(Seq(
       """{"run": {"id": 7, "flow_name": "weka.J48"}, "did": "d1"}""",
