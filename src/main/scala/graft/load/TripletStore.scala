@@ -40,7 +40,9 @@ import graft.operators.Checkpoints
   * exactly the live row; closed rows are immutable once written and are
   * unioned from every level. The reconstruction window and the MERGE
   * join hash-partition on the same identity key, so the join reuses the
-  * window's exchange rather than shuffling twice.
+  * window's exchange rather than shuffling twice. The read verbs
+  * cluster on `tripletHash` alone instead, which serves both the window
+  * and their triple dedup: one exchange per read.
   *
   * Scale: level dirs carry a subject-hash partition column (`sbkt =
   * pmod(xxhash64(subject), N)`). N is auto-sized from the first
@@ -133,16 +135,13 @@ class TripletStore(spark: SparkSession, path: String,
 
   private val fs = new java.io.File(path)
 
-  // No session conf is touched (r13 raised
-  // `spark.sql.parquet.pushdown.inFilterThreshold` session-wide to keep
-  // large Ins from "collapsing to a min..max range"): the r14
-  // in-pushdown matrix (SCALE.md § Triple store) measured Spark 4.1's
-  // ABOVE-threshold In path and found it is NOT a range collapse — it
-  // prunes row groups by the value set against footer stats and subject
-  // bloom filters, at ANY literal count, with none of the or-tree's
+  // No session conf is touched: `spark.sql.parquet.pushdown.inFilterThreshold`
+  // stays at its default, so every >10-literal subject predicate takes
+  // Spark 4.1's above-threshold In path, which prunes row groups by the
+  // value set against footer stats and subject bloom filters at any
+  // literal count (SCALE.md § Triple store), with none of the or-tree's
   // recursion cliff (task StackOverflowError in (1024, 1536]) and a
-  // fraction of its planning cost. Leaving the threshold at its default
-  // routes every >10-literal subject predicate through that path.
+  // fraction of its planning cost.
 
   /** Atomic marker publication (temp sibling + ATOMIC_MOVE): a plain
     * truncate-in-place write races a concurrent reader into observing
@@ -461,7 +460,20 @@ class TripletStore(spark: SparkSession, path: String,
   /** Snapshot reconstruction at version v. Open rows: latest writer per
     * identity wins (ties — one base holding both the open row and older
     * closed rows of the same identity — resolved open-first); closed
-    * rows are append-only across all levels.
+    * rows are append-only across all levels. One window over
+    * (`tripletHash`, `infoHash`) ordered by writing version answers
+    * both: `openOnly` keeps its live rows, otherwise the same filter also
+    * keeps every closed row — one scan of the levels either way.
+    *
+    * The window's exchange is the plan's only one, and `clustered`
+    * chooses its key. Merge passes `false`: the window hash-partitions
+    * on (`tripletHash`, `infoHash`), which is exactly what merge's
+    * full-outer join on that pair requires, so the join reuses the
+    * exchange. The read verbs pass `true`: the rows are hash-partitioned
+    * on `tripletHash` alone, which satisfies the window AND a following
+    * `dropDuplicates("tripletHash")` ([[triples]]), so latest-per-identity
+    * and the triple dedup share one exchange. Clustering merge the same
+    * way would cost its join a second exchange.
     *
     * `subjects`, when given, restricts the reconstruction to those
     * subjects BEFORE the window. Safe because the window key embeds the
@@ -485,7 +497,8 @@ class TripletStore(spark: SparkSession, path: String,
   private[graft] def reconstruct(v: Int, openOnly: Boolean,
                                  subjects: Option[DataFrame] = None,
                                  bucketsFor: Option[Int => Seq[Int]] = None,
-                                 subjectLits: Option[Seq[String]] = None): DataFrame = {
+                                 subjectLits: Option[Seq[String]] = None,
+                                 clustered: Boolean = false): DataFrame = {
     requireRetained(v)
     levelsAt(v, bucketsFor) match {
       case None => emptyRanges
@@ -502,9 +515,8 @@ class TripletStore(spark: SparkSession, path: String,
             // per-row-group pruning against footer stats AND the subject
             // bloom filters commitLevel writes, with no or-tree recursion
             // cliff and no range collapse (measured: SCALE.md § Triple
-            // store). Row-level evaluation is a hash-set InSet. The
-            // former 1k..10k "dead zone" (r13 capped the pushed or-tree
-            // at 1024) does not exist on this path.
+            // store). Row-level evaluation is a hash-set InSet, at any
+            // list size up to the cap.
             //
             // Defense for deployment-RAISED thresholds: an In at or
             // below the session inFilterThreshold pushes as an
@@ -518,10 +530,8 @@ class TripletStore(spark: SparkSession, path: String,
             // combined with a BALANCED pairwise Or reduction: the
             // deepest pushed path is one chunk's or-tree plus
             // log2(#chunks) (~517 at the 10k cap — well clear of the
-            // bracketed (1024, 1536] cliff, where the former
-            // left-associative reduce added #chunks-1 linear depth in
-            // unmeasured territory), and row eval stays one hash InSet
-            // per chunk.
+            // bracketed (1024, 1536] cliff), and row eval stays one hash
+            // InSet per chunk.
             val (nulls, named) = lits.partition(_ == null)
             val threshold = scala.util.Try(spark.conf.get(
               "spark.sql.parquet.pushdown.inFilterThreshold").toInt)
@@ -544,12 +554,11 @@ class TripletStore(spark: SparkSession, path: String,
         }
         val w = Window.partitionBy("tripletHash", "infoHash")
           .orderBy(col("v").desc, col("deprecated").asc)
-        val open = all.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1 && !col("deprecated"))
+        val live = col("rn") === 1 && !col("deprecated")
+        (if (clustered) all.repartition(col("tripletHash")) else all)
+          .withColumn("rn", row_number().over(w))
+          .filter(if (openOnly) live else live || col("deprecated"))
           .select(rangeCols: _*)
-        if (openOnly) open
-        else open.unionByName(
-          all.filter(col("deprecated")).select(rangeCols: _*))
     }
   }
 
@@ -575,9 +584,17 @@ class TripletStore(spark: SparkSession, path: String,
 
   /** V8 current-graph scan: non-deprecated triples. */
   def currentTriples: DataFrame =
-    reconstruct(currentVersion, openOnly = true)
-      .select("subject", "predicate", "obj", "objKind", "datatype")
-      .distinct()
+    triples(reconstruct(currentVersion, openOnly = true, clustered = true))
+
+  /** The distinct triples of a `clustered` reconstruction. `tripletHash`
+    * is the md5 of exactly these five null-coalesced fields
+    * ([[TripletStore.withIdentity]]), so one row per `tripletHash` is the
+    * same set as a five-column `distinct()` — and the dedup rides the
+    * reconstruction's exchange instead of planning its own. */
+  private def triples(ranges: DataFrame): DataFrame =
+    ranges.select(col("tripletHash") +: tripleCols: _*)
+      .dropDuplicates("tripletHash")
+      .select(tripleCols: _*)
 
   /** Oldest timestamp still answerable by [[asOf]]; None when no
     * time-based retention pass ([[compact(olderThan:Timestamp)*]]) has
@@ -605,10 +622,9 @@ class TripletStore(spark: SparkSession, path: String,
           s"the store at $path: closed ranges ending before the horizon " +
           "were purged by compact(olderThan) and the snapshot cannot be " +
           "reconstructed")
-    ranges.filter(col("useStart") <= lit(t) &&
-        (lit(t) <= col("useEnd") || !col("deprecated")))
-      .select("subject", "predicate", "obj", "objKind", "datatype")
-      .distinct()
+    triples(reconstruct(currentVersion, openOnly = false, clustered = true)
+      .filter(col("useStart") <= lit(t) &&
+        (lit(t) <= col("useEnd") || !col("deprecated"))))
   }
 
   /** A9 sanity count: distinct current subjects. */
@@ -628,48 +644,55 @@ class TripletStore(spark: SparkSession, path: String,
       subjects.map(TripletStore.subjectBucketLocal(_, n)).distinct)
   }
 
-  /** The reconstruction restricted to exactly `subjects`, through BOTH
-    * pruning terms: the subjects' bucket ids (per level modulus) prune
-    * level FILES at
-    * planning time (bucketed levels only; sub-threshold levels are
-    * scanned whole — they are small by construction), and below
-    * `subjectLiteralCap` the subject list itself pushes into the scans
-    * as a literal `isin` — parquet footer stats on the subject-sorted
-    * files then prune row groups WITHIN each touched bucket, so the
-    * read is O(matching row groups), not O(touched bucket). Above the
-    * cap (a list too large for a sane predicate tree) the restriction
-    * falls back to the null-safe semi-join. */
+  /** The `clustered` reconstruction restricted to exactly `subjects`.
+    * On BUCKETED levels two pruning terms apply: the subjects' bucket
+    * ids (per level modulus) prune level FILES at planning time, and up
+    * to `subjectLiteralCap` subjects the list itself pushes into the
+    * scans as a literal `isin`, so footer stats and subject bloom
+    * filters on the subject-sorted files prune row groups WITHIN each
+    * touched bucket. Above the cap the restriction is the null-safe
+    * semi-join, which drops rows only after reading them. UNBUCKETED
+    * levels (below `bucketMinRows`) get only the pushed `isin`, and a
+    * small level is typically one row group holding other subjects too,
+    * so in practice it is read whole. */
   private def subjectScoped(subjects: Seq[String], openOnly: Boolean): DataFrame = {
     val buckets = Some(bucketsFn(subjects))
     if (subjects.size <= subjectLiteralCap)
       reconstruct(currentVersion, openOnly,
-        bucketsFor = buckets, subjectLits = Some(subjects))
+        bucketsFor = buckets, subjectLits = Some(subjects), clustered = true)
     else {
       import spark.implicits._
       reconstruct(currentVersion, openOnly,
-        subjects = Some(subjects.toDF("subject")), bucketsFor = buckets)
+        subjects = Some(subjects.toDF("subject")), bucketsFor = buckets,
+        clustered = true)
     }
   }
 
-  /** V8 point lookup: the current triples of exactly these subjects,
-    * read through the bucket-pruned, literal-pushdown level scan — the
-    * engine-side analog of the reference's hash index on subject
-    * (`data/configuration/hf/load/sql_files/init.sql:28-38`):
-    * O(matching rows), never a lake or even a whole-bucket scan. */
+  /** V8 point lookup: the current triples of exactly these subjects —
+    * the engine-side analog of the reference's hash index on subject
+    * (`data/configuration/hf/load/sql_files/init.sql:28-38`), through
+    * [[subjectScoped]]'s pruned level scan. It reads the matching row
+    * groups of the touched buckets of bucketed levels, but unbucketed
+    * (sub-`bucketMinRows`) levels whole — and until a compaction folds
+    * the deltas into a lake-sized bucketed base, those dominate: at
+    * `perfbench`'s `harvest_serve` size a lookup reads ~178 parquet rows
+    * per returned row (`load.lookup_rows_read_per_row`). The plan has
+    * one exchange: the rows are clustered by `tripletHash`, which serves
+    * both the latest-per-identity window and the triple dedup
+    * ([[reconstruct]]). */
   def currentTriplesFor(subjects: Seq[String]): DataFrame =
-    subjectScoped(subjects, openOnly = true)
-      .select("subject", "predicate", "obj", "objKind", "datatype")
-      .distinct()
+    triples(subjectScoped(subjects, openOnly = true))
 
   /** V8 point lookup AT A TIMESTAMP: these subjects' triples as of `t`
     * — the composition of [[currentTriplesFor]] and [[asOf]], the
     * reference's most natural history-table read ("what did this model
     * card say in January"), sharing the bucket-pruned literal-pushdown
     * scan instead of filtering a whole-store as-of. Closed ranges
-    * participate (a range deprecated after `t` still answers), so the
-    * scan spans open and closed rows of the subjects — still O(their
-    * matching row groups). Below the retention horizon it THROWS like
-    * [[asOf]]: purged history must never silently answer. */
+    * participate (a range deprecated after `t` still answers): the one
+    * window over the subjects' rows yields their open and closed ranges
+    * in a single scan of each level, with one exchange. Below the
+    * retention horizon it THROWS like [[asOf]]: purged history must
+    * never silently answer. */
   def currentTriplesFor(subjects: Seq[String], asOf: Timestamp): DataFrame = {
     val h = horizonMs
     if (asOf.getTime < h)
@@ -678,11 +701,9 @@ class TripletStore(spark: SparkSession, path: String,
           s"of the store at $path: closed ranges ending before the " +
           "horizon were purged by compact(olderThan) and the snapshot " +
           "cannot be reconstructed")
-    subjectScoped(subjects, openOnly = false)
+    triples(subjectScoped(subjects, openOnly = false)
       .filter(col("useStart") <= lit(asOf) &&
-        (lit(asOf) <= col("useEnd") || !col("deprecated")))
-      .select("subject", "predicate", "obj", "objKind", "datatype")
-      .distinct()
+        (lit(asOf) <= col("useEnd") || !col("deprecated"))))
   }
 
   /** MERGE one extraction batch.
@@ -1439,14 +1460,22 @@ class TripletStore(spark: SparkSession, path: String,
   }
 
   /** V6 delta: triples in version b but not a (new) / in a but not b
-    * (retired). Pure anti-joins over snapshots. */
+    * (retired), compared on (subject, predicate, obj). Each snapshot is
+    * one reconstruction (one window exchange); the comparison is ONE
+    * aggregate over both, keyed by the triple, instead of a distinct per
+    * snapshot plus an anti-join. A triple with a null field never
+    * matches across snapshots — the equality of the anti-join this
+    * replaces — so it is reported on every side it appears. */
   def delta(fromV: Int, toV: Int): (DataFrame, DataFrame) = {
-    def tri(v: Int): DataFrame =
-      reconstruct(v, openOnly = true)
-        .select("subject", "predicate", "obj").distinct()
-    val a = tri(fromV); val b = tri(toV)
-    (b.join(a, Seq("subject", "predicate", "obj"), "left_anti"),
-      a.join(b, Seq("subject", "predicate", "obj"), "left_anti"))
+    val spo = Seq("subject", "predicate", "obj").map(col)
+    def side(v: Int, tag: String): DataFrame =
+      reconstruct(v, openOnly = true).select(spo :+ lit(tag).as("side"): _*)
+    val sides = side(fromV, "a").unionByName(side(toV, "b"))
+      .groupBy(spo: _*)
+      .agg(max(col("side") === "a").as("inA"), max(col("side") === "b").as("inB"))
+    val unmatched = spo.map(_.isNull).reduce(_ || _)
+    (sides.filter(col("inB") && (!col("inA") || unmatched)).select(spo: _*),
+      sides.filter(col("inA") && (!col("inB") || unmatched)).select(spo: _*))
   }
 }
 
@@ -1499,17 +1528,16 @@ object TripletStore {
     * becomes the cost and the semi-join wins. The whole cap range
     * pushes as ONE In through Spark 4.1's native set path — footer
     * stats + subject-bloom evaluation per row group, no or-tree, no
-    * recursion cliff: the r14 in-pushdown matrix (SCALE.md § Triple
-    * store) measured it pruning at 5000 literals where the r13 design
-    * assumed a range collapse and capped the pushed or-tree at 1024 (the
-    * or-tree itself StackOverflows in (1024, 1536], which is why the
-    * session In-threshold is left at its default and never raised). */
+    * recursion cliff; the in-pushdown matrix in SCALE.md § Triple store
+    * measured it pruning at 5000 literals. The or-tree form
+    * StackOverflows in (1024, 1536], which is why the session
+    * In-threshold is left at its default and never raised. */
   val DefaultSubjectLiteralCap = 10000
 
   /** Threshold ABOVE which a literal subject list, when a
     * deployment-raised `inFilterThreshold` would force the or-tree form
     * on it (at the default threshold of 10 nothing here forms one),
-    * gets chunked: r14 measured a 1024-deep pushed or-of-equals safe and
+    * gets chunked: a 1024-deep pushed or-of-equals is measured safe and
     * 1536 a task-killing StackOverflowError (SCALE.md § Triple store). */
   val OrTreeSafeLiterals = 1024
 
@@ -1660,6 +1688,9 @@ object TripletStore {
     physSchema.fields :+ StructField(BucketCol, IntegerType))
 
   private val rangeCols = rangeSchema.fieldNames.toSeq.map(col)
+
+  private val tripleCols =
+    Seq("subject", "predicate", "obj", "objKind", "datatype").map(col)
 
   /** Null-safe field form for identity hashing: `concat_ws` SKIPS null
     * fields, so without coalescing, a null shifts later fields left and

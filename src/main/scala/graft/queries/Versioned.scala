@@ -77,7 +77,7 @@ object Versioned {
     }
 
   /** V6 delta emit, oracle-graded: triples added / retired between the two
-    * snapshots — pure anti-joins over versions (`GraphHandler.py:78-148`).
+    * snapshots — a set difference over versions (`GraphHandler.py:78-148`).
     * Added = batch-2 fresh triples; retired = the deprecate-changed set. */
   def versionDelta(s: SparkSession, dir: String): DataFrame =
     withFixtureStore(s, dir) { store =>

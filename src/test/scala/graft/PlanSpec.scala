@@ -597,4 +597,65 @@ class PlanSpec extends AnyFunSuite {
     assert(!ns.contains("LeftSemi"), ns)
     graft.load.Scratch.rm(new java.io.File(storeDir))
   }
+
+  test("triplet store reads: one exchange, one scan per level; merge keeps its join's exchange") {
+    // every read verb clusters its level rows once, on tripletHash; merge
+    // alone keeps the window's (tripletHash, infoHash) exchange because
+    // its full-outer join on that pair reuses it
+    import java.sql.Timestamp
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.functions.{col, lit}
+    import spark.implicits._
+    val storeDir = java.nio.file.Files.createTempDirectory("plan_reads").toString
+    def nodes(df: DataFrame) = { df.collect(); PlanWalk.walk(executed(df)) }
+    def exchanges(df: DataFrame) = nodes(df).count(_.isInstanceOf[ShuffleExchangeLike])
+    def scans(df: DataFrame) = nodes(df).count(_.isInstanceOf[FileSourceScanExec])
+    def mkBatch(obj: String, t: String) =
+      (1 to 50).map(i => (s"m$i", "name", s"$obj$i")).toDF("subject", "predicate", "obj")
+        .withColumn("objKind", lit("literal")).withColumn("datatype", lit(""))
+        .withColumn("extractionMethod", lit("p")).withColumn("confidence", lit(1.0))
+        .withColumn("extractionTime", lit(Timestamp.valueOf(t)))
+    Seq(1L, load.TripletStore.DefaultBucketMinRows).foreach { minRows =>
+      val store = new load.TripletStore(spark, storeDir, autoCompactEvery = 0,
+        bucketMinRows = minRows)
+      store.merge(mkBatch("a", "2024-01-01 00:00:00"), Timestamp.valueOf("2024-01-01 00:00:00"))
+      store.merge(mkBatch("b", "2024-02-01 00:00:00"), Timestamp.valueOf("2024-02-01 00:00:00"))
+      val jan = Timestamp.valueOf("2024-01-15 00:00:00")
+      val what = s"(bucketMinRows = $minRows)"
+      // latest-per-identity and the triple dedup share one exchange on
+      // tripletHash, on the literal path and the above-cap semi-join path
+      val wide = (1 to 20).map(i => s"m$i")
+      Seq(store.currentTriplesFor(Seq("m7")), store.currentTriplesFor(Seq("m7"), jan),
+          store.currentTriplesFor(wide), store.currentTriplesFor(wide, jan))
+        .foreach(df => assert(exchanges(df) == 1, s"$what ${planString(df)}"))
+      val capped = new load.TripletStore(spark, storeDir, autoCompactEvery = 0,
+        bucketMinRows = minRows, subjectLiteralCap = 4)
+      Seq(capped.currentTriplesFor(wide), capped.currentTriplesFor(wide, jan))
+        .foreach(df => assert(exchanges(df) == 1, s"$what ${planString(df)}"))
+      // open and closed rows come from ONE scan per level, not a second
+      // union arm over the closed history; bucketed levels are one scan
+      // each, unbucketed levels share one multi-root scan
+      val levelScans = if (minRows == 1L) store.levelCount else 1
+      Seq(store.currentTriplesFor(Seq("m7"), jan), store.asOf(jan), store.ranges)
+        .foreach(df => assert(scans(df) == levelScans, s"$what ${planString(df)}"))
+      // delta: one window exchange per snapshot and one comparison
+      // aggregate, not a distinct per snapshot plus the anti-join's
+      val (added, retired) = store.delta(0, store.currentVersion)
+      Seq(added, retired).foreach(df =>
+        assert(exchanges(df) == 3, s"$what ${planString(df)}"))
+      // merge's store side keeps the window's own exchange on
+      // (tripletHash, infoHash): its full-outer join with the batch then
+      // adds only the batch side's exchange
+      val mergeRead = store.reconstruct(store.currentVersion, openOnly = true,
+        subjectLits = Some(Seq("m7")))
+      assert(exchanges(mergeRead) == 1, s"$what ${planString(mergeRead)}")
+      val inc = load.TripletStore.withIdentity(
+        mkBatch("c", "2024-03-01 00:00:00").filter(col("subject") === "m7"))
+      val joined = mergeRead.as("o").join(inc.as("i"),
+        col("o.tripletHash") === col("i.tripletHash") &&
+          col("o.infoHash") === col("i.infoHash"), "full_outer")
+      assert(exchanges(joined) == 2, s"$what ${planString(joined)}")
+      graft.load.Scratch.rm(new java.io.File(storeDir))
+    }
+  }
 }

@@ -28,14 +28,22 @@ import graft.TestSpark
   *
   * Timing margins: the liveness window (2000 ms) is 80x the heartbeat
   * interval (25 ms), mirroring production's 1 h / 10 min ratio, so
-  * scheduler jitter cannot make a beating owner look frozen. Bounded:
-  * two 4-thread rounds of ~4.5 s plus a deterministic takeover
-  * epilogue — well under the 30 s budget. */
+  * scheduler jitter cannot make a beating owner look frozen. Each of
+  * the two 4-thread rounds runs for at least 4.5 s and until it has
+  * made its share of the claim floor: one crash-before-release holds
+  * the marker for a whole liveness window, so a fixed deadline alone
+  * can end a round with too few claims. A round that misses its share
+  * by the hard cap fails loudly. A deterministic takeover epilogue
+  * follows. */
 class CompactionClaimFuzzSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
   private val WindowMs = 2000L
+  private val Rounds = 2
+  private val MinClaims = 4
+  private val RoundMinMs = 4500L
+  private val RoundCapMs = 30000L
 
   test("claim protocol fuzz: single owner, no lost marker, takeover only of the dead") {
     val dir = Files.createTempDirectory("store_claimfuzz").toString
@@ -58,13 +66,18 @@ class CompactionClaimFuzzSpec extends AnyFunSuite {
         }
       }
 
-    def claimant(seed: Int, deadlineNs: Long): Thread = new Thread(() => {
+    def claimant(seed: Int, roundClaims: AtomicInteger, minNs: Long, capNs: Long): Thread = new Thread(() => {
       val rnd = new scala.util.Random(seed)
       val store = mkStore()
-      while (System.nanoTime() < deadlineNs) {
+      def going = {
+        val now = System.nanoTime()
+        now < capNs && (now < minNs || roundClaims.get() < MinClaims / Rounds)
+      }
+      while (going) {
         try {
           val token = store.claimCompaction()
           claims.incrementAndGet()
+          roundClaims.incrementAndGet()
           val n = active.incrementAndGet()
           if (n != 1)
             violations.add(s"$n live owners after claim of $token")
@@ -93,11 +106,16 @@ class CompactionClaimFuzzSpec extends AnyFunSuite {
       }
     })
 
-    (0 until 2).foreach { round =>
-      val deadline = System.nanoTime() + 4500L * 1000000
-      val threads = (0 until 4).map(i => claimant(round * 100 + i, deadline))
+    (0 until Rounds).foreach { round =>
+      val roundClaims = new AtomicInteger(0)
+      val start = System.nanoTime()
+      val threads = (0 until 4).map(i => claimant(round * 100 + i, roundClaims,
+        start + RoundMinMs * 1000000, start + RoundCapMs * 1000000))
       threads.foreach(_.start())
-      threads.foreach(_.join(30000))
+      threads.foreach(_.join(RoundCapMs + 10000))
+      assert(roundClaims.get() >= MinClaims / Rounds,
+        s"round $round hit its ${RoundCapMs / 1000} s cap with only " +
+          s"${roundClaims.get()} claims")
     }
 
     // deterministic takeover epilogue: guarantee the dead-owner arm ran
@@ -119,7 +137,7 @@ class CompactionClaimFuzzSpec extends AnyFunSuite {
 
     assert(violations.isEmpty, s"protocol violations: " +
       violations.toArray.mkString("; "))
-    assert(claims.get() >= 4, s"only ${claims.get()} claims — fuzz too idle")
+    assert(claims.get() >= MinClaims, s"only ${claims.get()} claims — fuzz too idle")
     assert(takeovers.get() >= 1, "the takeover arm never exercised")
     assert(!marker.exists() ||
       crashed.contains(

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,6 +21,10 @@ import graft.TestSpark
   *     deprecated count never decreases across versions.
   *  L4 currency: currentTriples equals exactly the facts asserted for each
   *     subject in its LAST batch (plus untouched subjects' last state).
+  *  L5 read shape: every read verb equals, as a multiset, the
+  *     reconstruction written out the long way — a window per
+  *     (tripletHash, infoHash), open and closed rows as two union arms,
+  *     and a five-column distinct.
   */
 class VersioningLawsSpec extends AnyFunSuite {
 
@@ -100,6 +105,109 @@ class VersioningLawsSpec extends AnyFunSuite {
       assert(s5.nNew == 0 && s5.nDeprecated == 0,
         s"L1 violated: new=${s5.nNew} dep=${s5.nDeprecated}")
       assert(s5.nExtended == finalRows.size)
+    }
+  }
+
+  test("L5: every read verb equals the windowed union-and-distinct formulation") {
+    val t1 = "2024-01-01 00:00:00"; val t2 = "2024-02-01 00:00:00"
+    val t3 = "2024-03-01 00:00:00"; val t4 = "2024-04-01 00:00:00"
+    def facts(rows: Seq[(String, String, String, String, Double)], t: String): DataFrame =
+      rows.toDF("subject", "predicate", "obj", "extractionMethod", "confidence")
+        .withColumn("objKind", lit("literal"))
+        .withColumn("datatype", lit(""))
+        .withColumn("extractionTime", lit(Timestamp.valueOf(t)))
+    val filler = (1 to 4).map(i => (s"f$i", "name", s"n$i", "m", 1.0))
+    val batches = Seq(
+      t1 -> (filler ++ Seq(
+        // one triple under two infoHashes
+        ("s1", "name", "A", "m", 1.0), ("s1", "name", "A", "other", 0.5),
+        (null, "name", "N", "m", 1.0),
+        ("s2", "license", "L1", "m", 1.0), ("s3", "tag", "T1", "m", 1.0))),
+      // s1's second infoHash closes while the first extends; L1 and T1 close
+      t2 -> Seq(("s1", "name", "A", "m", 1.0), ("s2", "license", "L2", "m", 1.0),
+        ("s3", "tag", "T2", "m", 1.0)),
+      // L1 re-opens under its closed identity; the null subject moves on
+      t3 -> Seq(("s2", "license", "L1", "m", 1.0), (null, "name", "N2", "m", 1.0),
+        ("f1", "name", "n1", "m", 1.0)),
+      t4 -> Seq(("s3", "tag", "T1", "m", 1.0), ("s1", "name", "A", "m", 1.0),
+        ("s1", "name", "B", "m", 1.0),
+        ("f2", "name", "n2b", "m", 1.0)))
+    val lookups = Seq(Seq("s1"), Seq(null, "s2"), Seq("nobody"),
+      Seq("s1", "s2", "s3", null, "f1")) // the last one is above the cap
+    val asOfs = Seq(t1, "2024-01-15 00:00:00", t2, t3, t4, "2025-01-01 00:00:00")
+      .map(Timestamp.valueOf)
+    val tripleCols = Seq("subject", "predicate", "obj", "objKind", "datatype").map(col)
+
+    def bag(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+    Seq(1L, TripletStore.DefaultBucketMinRows).foreach { minRows =>
+      val dir = Files.createTempDirectory(s"laws_reads_$minRows").toString
+      val store = new TripletStore(spark, dir, autoCompactEvery = 0,
+        bucketMinRows = minRows, subjectLiteralCap = 3)
+      batches.zipWithIndex.foreach { case ((t, rows), i) =>
+        store.merge(facts(rows, t), Timestamp.valueOf(t))
+        // after v=2 the base holds L1's open and closed rows at one version
+        if (i == 2) store.compact(keep = 1)
+      }
+      val v = store.currentVersion
+
+      def reference(at: Int, openOnly: Boolean,
+                    subjects: Option[Seq[String]] = None): DataFrame = {
+        val levels = store.levelsAt(at).get
+        val all = subjects.fold(levels)(ss => levels.filter(
+          ss.map(x => col("subject") <=> lit(x)).reduce(_ || _)))
+        val w = Window.partitionBy("tripletHash", "infoHash")
+          .orderBy(col("v").desc, col("deprecated").asc)
+        val cols = TripletStore.rangeSchema.fieldNames.toSeq.map(col)
+        val open = all.withColumn("rn", row_number().over(w))
+          .filter(col("rn") === 1 && !col("deprecated")).select(cols: _*)
+        if (openOnly) open
+        else open.unionByName(all.filter(col("deprecated")).select(cols: _*))
+      }
+      def asOfFilter(df: DataFrame, t: Timestamp) =
+        df.filter(col("useStart") <= lit(t) &&
+          (lit(t) <= col("useEnd") || !col("deprecated")))
+      def triples(df: DataFrame) = df.select(tripleCols: _*).distinct()
+      val what = s"(bucketMinRows = $minRows)"
+
+      assert(bag(store.ranges) == bag(reference(v, openOnly = false)), s"ranges $what")
+      assert(bag(store.currentTriples) == bag(triples(reference(v, openOnly = true))),
+        s"currentTriples $what")
+      assert(store.distinctSubjectCount ==
+        triples(reference(v, openOnly = true)).select("subject").distinct().count(),
+        s"distinctSubjectCount $what")
+      asOfs.foreach { t =>
+        assert(bag(store.asOf(t)) ==
+          bag(triples(asOfFilter(reference(v, openOnly = false), t))), s"asOf $t $what")
+      }
+      lookups.foreach { ss =>
+        assert(bag(store.currentTriplesFor(ss)) ==
+          bag(triples(reference(v, openOnly = true, Some(ss)))),
+          s"currentTriplesFor $ss $what")
+        asOfs.foreach { t =>
+          assert(bag(store.currentTriplesFor(ss, t)) ==
+            bag(triples(asOfFilter(reference(v, openOnly = false, Some(ss)), t))),
+            s"currentTriplesFor $ss at $t $what")
+        }
+      }
+      val spo = Seq("subject", "predicate", "obj")
+      for (a <- store.oldestRetainedVersion to v; b <- store.oldestRetainedVersion to v) {
+        val ra = reference(a, openOnly = true).select(spo.map(col): _*).distinct()
+        val rb = reference(b, openOnly = true).select(spo.map(col): _*).distinct()
+        val (added, retired) = store.delta(a, b)
+        assert(bag(added) == bag(rb.join(ra, spo, "left_anti")), s"delta($a, $b) added $what")
+        assert(bag(retired) == bag(ra.join(rb, spo, "left_anti")), s"delta($a, $b) retired $what")
+      }
+      // the fixture reaches every case it is meant to
+      val r = store.ranges
+      assert(r.filter(col("subject").isNull).count() >= 2, s"null subject $what")
+      assert(r.filter(col("subject") === "s1" && col("obj") === "A")
+        .groupBy("deprecated").count().count() == 2, s"two infoHashes $what")
+      assert(r.filter(col("subject") === "s2" && col("obj") === "L1")
+        .groupBy("infoHash").count().filter(col("count") === 2).count() == 1,
+        s"re-opened identity $what")
+      assert(new java.io.File(dir, "base=2").isDirectory, s"no base $what")
+      Scratch.rm(new java.io.File(dir))
     }
   }
 
