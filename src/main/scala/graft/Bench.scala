@@ -11,11 +11,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Contention gate: the committed per-round snapshot has repeatedly
-    // started while the correctness sweep's load was still decaying
-    // (r4/r5/r7 ran at loadavg 3-4.6 and needed an idle companion to
-    // adjudicate). Wait — bounded — for the 1-minute load to drop
-    // before timing anything; the artifact then IS the idle number.
+    // Contention gate: a snapshot started while an earlier job's load is
+    // still decaying times the contention, not the engine. Wait —
+    // bounded — for the 1-minute load to drop before timing anything;
+    // the artifact then IS the idle number.
     // The PRE-SESSION reading is the contended-stamp key: sampled any
     // later, the session's own startup + warm-up load flags idle runs.
     val gate = sys.env.getOrElse("SPARK_GRAFT_LOADAVG_GATE", "1.0").toDouble
@@ -70,9 +69,9 @@ object Bench {
     val bestOfN = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt
     // Per-query SessionMemo traffic deltas: `memo_builds` > 0 means this
     // query CONSTRUCTED a session-shared artifact inside its first
-    // iteration (so its `first` number is memo-INCLUSIVE — the
-    // r14-comparable cold cost the r15 verdict asked for next to the
-    // minimum); `memo_hits` > 0 means it rode an existing one.
+    // iteration (so its `first` number is memo-INCLUSIVE — the cold
+    // cost, reported next to the minimum); `memo_hits` > 0 means it
+    // rode an existing one.
     import graft.operators.SessionMemo
     val timings = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val b0 = SessionMemo.buildCount.get()
@@ -101,9 +100,8 @@ object Bench {
         s""","memo_builds":$builds,"memo_hits":$hits}""" }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    // The driver's per-round snapshot has twice run on a contended box
-    // (r4, r5) while the controlled evidence sat in a separately
-    // committed idle run — so the snapshot NAMES its idle companion
+    // A snapshot taken on a contended box is adjudicated by a separately
+    // committed idle run, so the snapshot NAMES its idle companion
     // (newest committed tools/bench_r*_idle_full*.json and its total):
     // a reader of BENCH_rN.json is pointed at the adjudicated numbers
     // without having to know the convention.
@@ -132,8 +130,8 @@ object Bench {
         }.getOrElse("")
     }
     // Contended-stamp refusal: a committed artifact taken above the gate
-    // is noise a future reader will misread (the r9 headline was 179 s at
-    // loadavg 1.66 vs 93.6 s idle). The run still completes and prints —
+    // is noise a future reader will misread (a contended total can read
+    // twice the idle one). The run still completes and prints —
     // the driver contract — but it is flagged AND the full artifact is
     // diverted to /tmp instead of the committed tools/ path.
     val contended = loadBefore >= gate

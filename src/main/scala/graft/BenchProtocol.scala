@@ -12,9 +12,8 @@ private[graft] object BenchProtocol {
   /** min / median / spread (max/min) of one query's N timings, plus the
     * FIRST (iteration-1) timing: for a query whose first run constructs
     * a session-shared `graft.memo.*` artifact, `first` is the
-    * memo-INCLUSIVE cold number the r15 verdict asked the artifact to
-    * carry next to the best-of-N minimum — r14-comparable where the
-    * minimum no longer is. */
+    * memo-INCLUSIVE cold number, carried next to the best-of-N minimum
+    * because the minimum hides the memo's construction. */
   final case class Timing(min: Double, med: Double, spread: Double,
                           first: Double)
 

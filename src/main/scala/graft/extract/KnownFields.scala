@@ -28,6 +28,9 @@ object KnownFields {
       .withColumn("readme_url",
         concat(lit("https://huggingface.co/"), col("modelId"),
           lit("/blob/main/README.md")))
-      .withColumn("description",
-        trim(regexp_replace(col("card"), "(?s)---.*?---", "")))
+      // strip ALL surrounding whitespace (`trim` takes only spaces): the
+      // newline after the front matter must not lead the description,
+      // and a front-matter-only card must yield "" (dropped), not "\n"
+      .withColumn("description", regexp_replace(
+        regexp_replace(col("card"), "(?s)---.*?---", ""), "^\\s+|\\s+$", ""))
 }

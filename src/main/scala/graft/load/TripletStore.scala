@@ -105,15 +105,15 @@ import graft.operators.Checkpoints
   * cannot arise from this writer. Compaction/retention is SINGLE-OWNER
   * and the rule is ENFORCED, not a convention: every pass first CLAIMS
   * a tokened marker ([[TripletStore.CompactionMarker]], exclusive
-  * publish) and HEARTBEATS it (sequence bump in the
-  * [[TripletStore.CompactionSeqMarker]] sidecar + mtime refresh, every
+  * publish, AFTER its own [[TripletStore.CompactionSeqMarker]] sidecar)
+  * and HEARTBEATS that sidecar (a sequence bump every
   * [[TripletStore.CompactionHeartbeatMs]]) for as long as the pass
-  * runs — a second owner throws
-  * [[TripletStore.ConcurrentCompactionException]] with the store
-  * untouched; only a marker a claimant has OBSERVED unchanged across
-  * [[TripletStore.TmpSweepAgeMs]] on its own clock (a crashed owner,
-  * not merely a slow or clock-skewed
-  * one: a 100 TB base build routinely outlives any fixed claim age) is
+  * runs. The sidecar is the claim's one liveness signal — a second
+  * owner throws [[TripletStore.ConcurrentCompactionException]] with
+  * the store untouched; only a claim whose (token, sidecar) a claimant
+  * has OBSERVED unchanged across [[TripletStore.TmpSweepAgeMs]] on its
+  * own clock (a crashed owner, not merely a slow or clock-skewed one:
+  * a 100 TB base build routinely outlives any fixed claim age) is
   * taken over. The owner re-verifies its token immediately before the
   * deletion phase, so a pass that WAS taken over (JVM paused past the
   * liveness window) aborts loudly with its base committed and nothing
@@ -960,52 +960,45 @@ class TripletStore(spark: SparkSession, path: String,
   /** CLAIM single-owner compaction via a tokened marker — the
     * TripletStore port of [[graft.similarity.BatchedSignatureStore]]'s
     * maintenance protocol. Merges are rename-safe multi-writer, but
-    * compaction DELETES level dirs; before this claim, cross-process
-    * coordination was a scaladoc contract ("run compaction from one
-    * owner") with nothing enforcing it — two owners could interleave
-    * deletions under each other's base builds. Now the entry point is
-    * the enforcement: exactly one claimant wins the EXCLUSIVE marker
-    * publish ([[publishMarkerExclusive]]); a loser observing a LIVE
-    * marker throws [[TripletStore.ConcurrentCompactionException]] with
-    * the store untouched (a lost compaction race is a scheduling bug to
-    * surface, not retry); a marker whose heartbeat
-    * ([[startCompactionHeartbeat]]) went stale for
-    * [[TripletStore.TmpSweepAgeMs]] is a dead owner's leftover — the
-    * claimant atomically grabs it (rename) and publishes its own.
+    * compaction DELETES level dirs, so the entry point enforces one
+    * owner: exactly one claimant wins the EXCLUSIVE marker publish
+    * ([[publishMarkerExclusive]]); a loser observing a LIVE marker
+    * throws [[TripletStore.ConcurrentCompactionException]] with the
+    * store untouched (a lost compaction race is a scheduling bug to
+    * surface, not retry) and leaves no file behind; a claim whose
+    * owner made no progress for [[claimLivenessWindowMs]] is a dead
+    * owner's leftover — the claimant atomically grabs it (rename) and
+    * publishes its own.
     *
-    * Liveness is judged CLOCK-FREE, by observed progress: the owner's
-    * heartbeat bumps a monotone sequence in the
-    * [[TripletStore.CompactionSeqMarker]] sidecar (and refreshes the
-    * marker mtime, which pre-r15 claimants key on); a claimant takes
-    * over only after it has OBSERVED an unchanged (marker content,
-    * marker mtime, sequence) across [[claimLivenessWindowMs]] measured
-    * on its OWN monotonic clock. Comparing the claimant's wall clock to
-    * an mtime the OWNER's clock stamped (the r14 scheme) let a clock
-    * skew at or above the window — or a filesystem with coarse mtime
-    * fidelity — take over a LIVE owner; no cross-host clock is read
-    * on this path at all. The mtime still participates as a CHANGE
-    * signal (any refresh resets the observation), so a still-beating
-    * pre-r15 owner is also safe from an r15 claimant. One deliberate
-    * exception: a marker stale past 24x the window falls to takeover on
-    * first sight — the ephemeral-claimant recovery floor (see the
-    * inline rationale). Returns the owner token
-    * [[releaseCompaction]] requires. */
+    * The claimant publishes its own progress sidecar
+    * ([[TripletStore.CompactionSeqMarker]]`+token`) BEFORE the marker,
+    * so a marker never stands without its owner's sidecar, and a failed
+    * sidecar write fails the claim before any marker exists. Liveness
+    * has ONE signal, judged clock-free: the owner's heartbeat
+    * ([[startCompactionHeartbeat]]) bumps a sequence in that sidecar; a
+    * claimant takes over only after it has OBSERVED an unchanged
+    * (marker token, that owner's sidecar content) across
+    * [[claimLivenessWindowMs]] on its OWN monotonic clock. No cross-host
+    * clock is compared on this path, except the disaster-recovery floor
+    * (see the inline rationale): a claim whose sidecar is older than 24x
+    * the window falls to takeover on first sight. Returns the owner
+    * token [[releaseCompaction]] requires. */
   private[load] def claimCompaction(): String = {
     val token = java.util.UUID.randomUUID().toString.take(8)
+    val own = new java.io.File(fs, CompactionSeqMarker + token)
+    fs.mkdirs()
+    publishMarker(own.getName, s"$token ${heartbeatSeq.incrementAndGet()}")
     if (!publishMarkerExclusive(CompactionMarker, token)) {
       val marker = new java.io.File(fs, CompactionMarker)
-      val seq = new java.io.File(fs, CompactionSeqMarker)
-      // one composite observation: any component changing between two
-      // observations means the owner made progress
-      val observed =
-        try Some(java.nio.file.Files.readString(marker.toPath).trim +
-          "|" + marker.lastModified() + "|" +
-          (if (seq.exists())
-            scala.util.Try(
-              java.nio.file.Files.readString(seq.toPath).trim)
-              .getOrElse("<torn>")
-          else "<none>"))
+      val owner =
+        try Some(java.nio.file.Files.readString(marker.toPath).trim)
         catch { case _: java.io.IOException => None } // released: retry below
+      val seq = owner.map(o => new java.io.File(fs, CompactionSeqMarker + o))
+      // one observation: either part changing between two observations
+      // means the owner made progress
+      val observed = owner.map(o => o + "|" +
+        scala.util.Try(java.nio.file.Files.readString(seq.get.toPath).trim)
+          .getOrElse("<none>"))
       val nowNs = System.nanoTime()
       val frozenForMs = observed.map { st =>
         val prev = claimObservation.get()
@@ -1017,26 +1010,19 @@ class TripletStore(spark: SparkSession, path: String,
       // memory is process-local, so a claimant that never lives a full
       // window (a fresh JVM per batch run) could never reclaim a crashed
       // store — auto-compaction would skip forever and levels would
-      // accumulate unboundedly. A claim whose mtime age exceeds 24x the
-      // window is treated as frozen on FIRST sight. This is the one
-      // remaining cross-host clock comparison, deliberately at a bound
-      // where it is harmless — and it must hold on EVERY liveness file
-      // the owner refreshes: the marker mtime AND, when the sidecar
-      // exists (an r15+ owner), the sidecar's own mtime (each beat
-      // republishes it, so a live owner's sidecar is never older than
-      // one heartbeat). Keying the floor on the marker alone let a
-      // claimant whose clock (or whose view of the marker's mtime — the
-      // clock-free spec pins it hours in the past while the heartbeat
-      // still beats) read "ancient" take over a LIVE owner. A pre-r15
-      // owner has no sidecar and keeps the marker-mtime floor; a
-      // wrongful takeover now requires skew/fidelity loss exceeding a
-      // full DAY at production settings on BOTH files — and the owner's
-      // pre-deletion verify still bounds the damage if it ever fires.
-      val floorMs = 24L * claimLivenessWindowMs
-      def pastFloor(f: java.io.File): Boolean =
-        f.exists() && System.currentTimeMillis() - f.lastModified() > floorMs
-      val ancient = observed.isDefined && pastFloor(marker) &&
-        (!seq.exists() || pastFloor(seq))
+      // accumulate unboundedly. A claim whose owner's sidecar was last
+      // republished more than 24x the window ago is treated as frozen
+      // on FIRST sight. This is the one cross-host clock comparison,
+      // deliberately at a bound where it is harmless: each beat
+      // republishes the sidecar, so a live owner's is never older than
+      // one heartbeat, and a wrongful takeover needs skew or mtime
+      // fidelity loss beyond a full DAY at production settings (the
+      // owner's pre-deletion verify still bounds the damage). A marker
+      // with no sidecar gets no floor: one observed window, as any
+      // frozen claim.
+      val ancient = seq.exists(f => f.exists() &&
+        System.currentTimeMillis() - f.lastModified() >
+          24L * claimLivenessWindowMs)
       if (frozenForMs.exists(_ >= claimLivenessWindowMs) || ancient) {
         // observed-dead takeover: the GRAB is atomic (rename), so of N
         // claimants over one frozen marker exactly one proceeds to
@@ -1045,11 +1031,15 @@ class TripletStore(spark: SparkSession, path: String,
         try {
           java.nio.file.Files.move(marker.toPath, grab.toPath,
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          grab.delete()
+          // the seam sees the grab before any cleanup: until the publish
+          // below, the emptied slot is open to every claimant
           onClaimTakeover(observed.get)
+          grab.delete()
+          seq.foreach(_.delete()) // marker first, then its sidecar
         } catch { case _: java.io.IOException => () }
       }
-      if (!publishMarkerExclusive(CompactionMarker, token))
+      if (!publishMarkerExclusive(CompactionMarker, token)) {
+        own.delete()
         throw new TripletStore.ConcurrentCompactionException(
           s"a compaction pass on $path appears IN FLIGHT (claim " +
             s"unchanged for ${frozenForMs.getOrElse(0L) / 1000}s on this " +
@@ -1058,19 +1048,8 @@ class TripletStore(spark: SparkSession, path: String,
             "re-running: a claim observed frozen for " +
             s"${claimLivenessWindowMs / 1000}s is a crashed owner's " +
             "leftover and is taken over")
+      }
     }
-    // Bootstrap the progress sidecar AT CLAIM TIME, not at the first
-    // heartbeat: between winning the marker and the heartbeat's first
-    // beat the claim would otherwise have NO sidecar, and the
-    // disaster-recovery floor's sidecar-absent arm (pre-r15 owners)
-    // could read a live claim whose marker mtime merely LOOKS ancient
-    // as first-sight-frozen — the startup window the clock-free spec's
-    // attack loop hits. A failed publish is harmless (the first beat
-    // republishes); a takeover overwrites the dead owner's stale
-    // sidecar here, which is the self-healing the heartbeat documents.
-    try publishMarker(CompactionSeqMarker,
-      s"$token ${heartbeatSeq.incrementAndGet()}")
-    catch { case _: java.io.IOException => () }
     claimObservation.set(null) // claimed: a future claim starts fresh
     token
   }
@@ -1097,50 +1076,35 @@ class TripletStore(spark: SparkSession, path: String,
   private val heartbeatSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Signal claim liveness IFF the marker still carries `token`;
-    * returns whether the heartbeat should CONTINUE. Two signals per
-    * beat: the [[TripletStore.CompactionSeqMarker]] sidecar gets the
-    * next sequence (atomic publish — clock-free progress for r15+
-    * claimants), and the marker mtime is refreshed (the pre-r15
-    * claimants' liveness signal; for r15+ observers a refresh is merely
-    * another change that resets their observation). The marker itself
-    * is NEVER content-rewritten — if a takeover swaps it between the
-    * read and the touch (only possible after this owner already looked
-    * dead for a full liveness window), the touch refreshes the NEW
-    * owner's mtime and the sidecar carries a stale token one beat
-    * (self-healing: the new owner's next beat overwrites it, and
-    * observers see both writes as progress); a rewrite would clobber
-    * the new owner's token. Only an OBSERVED
-    * foreign token stops the heartbeat: a transient read failure (an
-    * NFS blip at hour 2 of a 6-hour base build) skips the signals and
-    * retries next beat — treating it as lost ownership would silently
+    * returns whether the heartbeat should CONTINUE. One signal per beat:
+    * this owner's own sidecar ([[TripletStore.CompactionSeqMarker]]
+    * `+token`) gets the next sequence (atomic publish). The marker is
+    * never touched, so a takeover between the read and the publish
+    * cannot disturb the new owner: it only leaves this dead token's
+    * sidecar behind, a `.tmp-` file the compaction sweep collects. Only
+    * an OBSERVED foreign token stops the heartbeat: a transient read
+    * failure (an NFS blip at hour 2 of a 6-hour base build) skips the
+    * beat and retries — treating it as lost ownership would silently
     * kill the thread, freeze the observation, and invite a live-owner
     * takeover, the exact failure the heartbeat exists to prevent. */
   private[load] def heartbeatCompaction(token: String): Boolean = {
-    val marker = new java.io.File(fs, CompactionMarker)
     val state =
-      try Some(java.nio.file.Files.readString(marker.toPath).trim == token)
+      try Some(java.nio.file.Files.readString(
+        new java.io.File(fs, CompactionMarker).toPath).trim == token)
       catch { case _: java.io.IOException => None } // unreadable: retry
-    state match {
-      case Some(true) =>
-        try {
-          publishMarker(CompactionSeqMarker,
-            s"$token ${heartbeatSeq.incrementAndGet()}")
-          java.nio.file.Files.setLastModifiedTime(marker.toPath,
-            java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-        } catch { case _: java.io.IOException => () } // transient: retry next beat
-        true
-      case Some(false) => false // confirmed foreign: ownership lost, stop
-      case None => true
-    }
+    if (state.contains(true))
+      try publishMarker(CompactionSeqMarker + token,
+        s"$token ${heartbeatSeq.incrementAndGet()}")
+      catch { case _: java.io.IOException => () } // transient: retry next beat
+    !state.contains(false) // a confirmed foreign token: ownership lost, stop
   }
 
   /** Heartbeat the compaction claim on a daemon thread until interrupted
     * (or until a beat observes a foreign token — ownership lost, stop
-    * touching). Keeps a LIVE owner's marker fresh for however long the
-    * pass runs, so [[claimCompaction]]'s staleness takeover only ever
-    * fires on a genuinely crashed owner — a write-once marker made any
-    * pass longer than [[TripletStore.TmpSweepAgeMs]] (routine for a
-    * 100 TB base build) look dead and invited interleaved deletions. */
+    * signalling). Keeps a LIVE owner's sidecar advancing for however
+    * long the pass runs, so [[claimCompaction]]'s takeover only ever
+    * fires on a genuinely crashed owner, however far a 100 TB base
+    * build outlives [[TripletStore.TmpSweepAgeMs]]. */
   private[load] def startCompactionHeartbeat(
       token: String,
       intervalMs: Long = CompactionHeartbeatMs): Thread = {
@@ -1212,11 +1176,13 @@ class TripletStore(spark: SparkSession, path: String,
     * (the grabbed copy is superseded). On a filesystem without hard
     * links (UnsupportedOperationException, or EPERM surfacing as a bare
     * IOException) the restore falls back to a move-back of the grabbed
-    * file itself — mtime travels with the rename, so the liveness gate
-    * reads unchanged. If even the fallback fails, the grabbed copy is
-    * the LAST evidence of a live owner's pass and strands at `.tmp-*`
+    * file itself — the token travels with the rename, so a claimant's
+    * observation reads unchanged. If even the fallback fails, the
+    * grabbed copy is the LAST evidence of a live owner's pass and
+    * strands at `.tmp-*`
     * (sweepTmp's age gate gives that owner [[TripletStore.TmpSweepAgeMs]]
-    * to land) — strictly better than deleting it now. */
+    * to land) — strictly better than deleting it now. This owner's
+    * sidecar goes after the marker, whoever holds the marker now. */
   private[load] def releaseCompaction(token: String): Unit = {
     val marker = new java.io.File(fs, CompactionMarker)
     val grab = new java.io.File(fs, s".tmp-release-$token")
@@ -1259,10 +1225,8 @@ class TripletStore(spark: SparkSession, path: String,
           }
         }
       if (disposable) grab.delete()
-      // our own released claim takes its liveness sidecar with it; a
-      // foreign owner's sidecar is ITS progress signal — leave it
-      if (ours) new java.io.File(fs, CompactionSeqMarker).delete()
     }
+    new java.io.File(fs, CompactionSeqMarker + token).delete()
   }
 
   /** Compaction: materialize the full state at the oldest retained
@@ -1279,7 +1243,7 @@ class TripletStore(spark: SparkSession, path: String,
     val owner = claimCompaction()
     val hb = startCompactionHeartbeat(owner)
     try compactOwned(keep, owner)
-    finally { hb.interrupt(); releaseCompaction(owner) }
+    finally { hb.interrupt(); hb.join(); releaseCompaction(owner) }
   }
 
   private def compactOwned(keep: Int, owner: String): Seq[Int] = {
@@ -1380,7 +1344,7 @@ class TripletStore(spark: SparkSession, path: String,
     val owner = claimCompaction()
     val hb = startCompactionHeartbeat(owner)
     try compactOlderOwned(olderThan, owner)
-    finally { hb.interrupt(); releaseCompaction(owner) }
+    finally { hb.interrupt(); hb.join(); releaseCompaction(owner) }
   }
 
   private def compactOlderOwned(olderThan: Timestamp, owner: String): Seq[Int] = {
@@ -1627,19 +1591,23 @@ object TripletStore {
   val HorizonMarker = "_RETENTION_HORIZON"
 
   /** Tokened single-owner compaction claim marker (content: the owner
-    * token; liveness: observed progress of the
-    * [[CompactionSeqMarker]] sidecar / marker mtime across a claimant's
-    * own [[TmpSweepAgeMs]] wait) — see `claimCompaction`. */
+    * token). Published only AFTER its owner's [[CompactionSeqMarker]]
+    * sidecar; liveness is that sidecar's observed progress across a
+    * claimant's own [[TmpSweepAgeMs]] wait, never this file's mtime —
+    * see `claimCompaction`. */
   val CompactionMarker = "_COMPACTING"
 
-  /** Claim-liveness sidecar (content: `<owner token> <sequence>`): the
-    * owner's heartbeat bumps the sequence every beat, so a claimant
-    * judges death by observing NO CHANGE across its own wait — no
-    * cross-host clock comparison, no mtime-fidelity dependence. Swept
-    * with the released claim; a crashed owner's leftover is harmless
-    * (stale token, frozen sequence — exactly what a takeover needs to
-    * observe). */
-  val CompactionSeqMarker = "_COMPACTING_SEQ"
+  /** Name prefix of a claimant's liveness sidecar, `<prefix><token>`
+    * (content: `<token> <sequence>`) — the claim's ONE liveness signal.
+    * Written BEFORE the exclusive [[CompactionMarker]] publish, so a
+    * marker never stands without its owner's sidecar; the owner's
+    * heartbeat bumps the sequence every beat, so a claimant judges death
+    * by observing NO CHANGE across its own wait, with no cross-host
+    * clock comparison. A losing claimant deletes its own; release and
+    * takeover delete the marker first, then that token's sidecar. The
+    * `.tmp-` name lets the compaction sweep collect the orphan of a
+    * claimant that crashed between its sidecar write and its loss. */
+  val CompactionSeqMarker = ".tmp-claimseq-"
 
   /** A compaction/retention pass lost the single-owner CLAIM to a live
     * concurrent owner. The store is UNCHANGED (nothing was built or
@@ -1653,17 +1621,19 @@ object TripletStore {
 
   /** Age past which a `.tmp-` commit dir is considered a dead writer's
     * leftover and swept by compaction (a live writer's tmp mtime
-    * refreshes with every landing part file). Doubles as the compaction
-    * claim's liveness window: a claim whose heartbeat signals
-    * ([[TripletStore!.startCompactionHeartbeat]] — sequence sidecar +
-    * mtime) a claimant observes UNCHANGED for this long on its own
-    * clock is a crashed owner's leftover and may be taken over. */
+    * refreshes with every landing part file; a live claim owner's
+    * [[CompactionSeqMarker]] sidecar is republished every
+    * [[CompactionHeartbeatMs]]). Doubles as the compaction claim's
+    * liveness window: a claim whose owner's sidecar a claimant observes
+    * UNCHANGED for this long on its own clock is a crashed owner's
+    * leftover and may be taken over. */
   val TmpSweepAgeMs: Long = 60L * 60 * 1000
 
-  /** Interval at which a compaction owner refreshes its claim marker's
-    * mtime — comfortably inside the [[TmpSweepAgeMs]] liveness window,
-    * so only a genuinely crashed (or hour-long-paused) owner ever looks
-    * dead, regardless of how long the pass itself runs. */
+  /** Interval at which a compaction owner republishes its
+    * [[CompactionSeqMarker]] sidecar with the next sequence (it never
+    * touches the marker) — comfortably inside the [[TmpSweepAgeMs]]
+    * liveness window, so only a genuinely crashed (or hour-long-paused)
+    * owner ever looks dead, regardless of how long the pass runs. */
   val CompactionHeartbeatMs: Long = TmpSweepAgeMs / 6
 
   val rangeSchema: StructType = StructType(Seq(

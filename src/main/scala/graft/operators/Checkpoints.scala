@@ -11,8 +11,6 @@ import org.apache.spark.sql.DataFrame
   * operators thousands of times per session: at 100 TB every batch pins
   * megabytes of executor storage memory forever, and storage-evicted
   * executors start recomputing or OOMing long before the job is done.
-  * (The same defect class as the PageRank convergence-loop leak fixed
-  * in round 9 — this is that fix made reusable.)
   *
   * Reclamation is THREAD-CONFINED ([[scoped]] + [[ck]]), never a
   * session-global persistent-RDD delta: the repo explicitly supports

@@ -36,8 +36,9 @@ object ConnectedComponents {
     applyWithRounds(edges, maxIter)._1
 
   /** [[apply]] plus the number of large+small rounds it took — the probe
-    * surface for the O(log² n) convergence claim (CcScaleProbe records
-    * measured rounds on chains/cliques/random graphs in SCALE.md). */
+    * surface for the O(log² n) convergence claim (SCALE.md § Dedup /
+    * similarity records measured rounds on chains/cliques/random
+    * graphs). */
   def applyWithRounds(edges: DataFrame, maxIter: Int = 50): (DataFrame, Int) = {
     val u = edges.columns(0)
     val v = edges.columns(1)

@@ -124,9 +124,8 @@ object PageRank {
     (ranks.select(col("id"), col("r").as("rank_fp")), it)
   }
 
-  /** See [[Checkpoints.free]] — promoted to a shared util in round 9 so
-    * the index mutators and connected components inherit the same
-    * hygiene this loop pioneered. */
+  /** See [[Checkpoints.free]], which the index mutators and connected
+    * components share with this loop. */
   private def freeLocalCheckpoint(df: DataFrame): Unit =
     Checkpoints.free(df)
 }

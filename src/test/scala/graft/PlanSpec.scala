@@ -24,14 +24,13 @@ class PlanSpec extends AnyFunSuite {
   }
 
   private def countShuffles(df: DataFrame): Int = {
-    // count() to let AQE finalize, then inspect the final plan
-    df.count()
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case other =>
-        Seq(other) ++ other.children.flatMap(walk) ++ other.subqueries.flatMap(walk)
-    }
-    walk(executed(df)).count(_.isInstanceOf[ShuffleExchangeLike])
+    // run `df` ITSELF so its own AQE plan finalizes (an action on a
+    // derived frame finalizes a different plan), then count the final
+    // plan's exchanges, subqueries included
+    df.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] =
+      PlanWalk.walk(p).flatMap(n => n +: n.subqueries.flatMap(nodes))
+    nodes(executed(df)).count(_.isInstanceOf[ShuffleExchangeLike])
   }
 
   test("scan pushdown: filter and projection reach the parquet reader") {

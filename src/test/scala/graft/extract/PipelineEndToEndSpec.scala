@@ -232,6 +232,26 @@ class PipelineEndToEndSpec extends AnyFunSuite {
       1.0)) == 1)
   }
 
+  test("descriptions carry no surrounding whitespace; front matter alone is none") {
+    // the front-matter-only card ends in a newline, as generated cards do
+    val fmOnly = "---\nlicense: mit\nlicense_link: " + ("x" * 220) + "\n---\n"
+    val snap = snapshot(goodCard).union(Seq(
+      ("org/fm-only-nl", "org", tstamp("2024-01-02 00:00:00"), 1L, 0L,
+        "transformers", Seq("en"), "fill-mask", tstamp("2024-01-01 00:00:00"),
+        fmOnly))
+      .toDF("modelId", "author", "last_modified", "downloads", "likes",
+        "library_name", "tags", "pipeline_tag", "createdAt", "card"))
+    val props = ModelCardPipeline.properties(snap, vocabs, new TokenOverlapScorer, queries)
+    assert(props.filter(col("modelId") === "org/fm-only-nl").count() > 0,
+      "the front-matter-only card must survive the quality filter")
+    val desc = props.filter(col("property") === "schema.org:description")
+      .select("modelId", "value").as[(String, String)].collect().toMap
+    assert(!desc.contains("org/fm-only-nl"), s"whitespace description: $desc")
+    assert(desc("org/model-one").startsWith("# BERT variant"),
+      desc("org/model-one").take(20))
+    assert(desc.values.forall(v => v == v.strip), desc)
+  }
+
   test("properties scans the snapshot twice and parses front matter once") {
     import org.apache.spark.sql.catalyst.expressions.ScalaUDF
     import org.apache.spark.sql.execution.FileSourceScanExec

@@ -874,20 +874,24 @@ class TripletStoreSpec extends AnyFunSuite {
       store.merge(batch(Seq(("m1", "name", s"v$i")), s"2024-0$i-01 00:00:00"),
         ts(s"2024-0$i-01 00:00:00"))
     }
-    val dirsBefore = new java.io.File(dir).listFiles().map(_.getName).toSet
-    // owner A mid-pass: a FRESH claim marker stands (published here with
-    // the real wire format — token content, liveness by mtime)
+    // owner A mid-pass: a FRESH claim (marker + its sidecar) stands,
+    // taken by a second store through the real writer
+    val ownerA = new TripletStore(spark, dir, autoCompactEvery = 0)
+      .claimCompaction()
     val marker = new java.io.File(dir, TripletStore.CompactionMarker)
-    java.nio.file.Files.writeString(marker.toPath, "ownerA01")
+    val sidecarA = TripletStore.CompactionSeqMarker + ownerA
+    val dirsBefore = new java.io.File(dir).listFiles().map(_.getName).toSet
+    assert(dirsBefore.contains(TripletStore.CompactionMarker) &&
+      dirsBefore.contains(sidecarA), dirsBefore)
     val e = intercept[TripletStore.ConcurrentCompactionException] {
       store.compact(keep = 1)
     }
     assert(e.getMessage.contains("single-owner"), e.getMessage)
-    // the loser touched NOTHING: no base built, no level deleted, and
-    // owner A's claim still stands with its token
+    // the loser touched NOTHING and left nothing: no base built, no level
+    // deleted, no sidecar of its own, and owner A's claim still stands
     assert(new java.io.File(dir).listFiles().map(_.getName).toSet
-      == dirsBefore + TripletStore.CompactionMarker)
-    assert(java.nio.file.Files.readString(marker.toPath).trim == "ownerA01")
+      == dirsBefore)
+    assert(java.nio.file.Files.readString(marker.toPath).trim == ownerA)
     // owner A is dead (its claim never changes): the intercept above
     // already STARTED this claimant's observation window; once the
     // window passes on the claimant's own clock with no observed
@@ -897,13 +901,16 @@ class TripletStoreSpec extends AnyFunSuite {
     val dropped = store.compact(keep = 1)
     assert(dropped.nonEmpty)
     assert(!marker.exists(), "a completed pass must release its claim")
+    assert(!new java.io.File(dir, sidecarA).exists(),
+      "the takeover removes the dead owner's sidecar")
     assert(store.currentTriples.filter(col("obj") === "v3").count() == 1)
     // retention claims through the same gate
-    java.nio.file.Files.writeString(marker.toPath, "ownerB02")
+    val storeB = new TripletStore(spark, dir, autoCompactEvery = 0)
+    val ownerB = storeB.claimCompaction()
     intercept[TripletStore.ConcurrentCompactionException] {
       store.compact(olderThan = ts("2024-02-15 00:00:00"))
     }
-    marker.delete()
+    storeB.releaseCompaction(ownerB)
     store.compact(olderThan = ts("2024-02-15 00:00:00"))
     assert(!marker.exists())
     Scratch.rm(new java.io.File(dir))
@@ -1049,10 +1056,10 @@ class TripletStoreSpec extends AnyFunSuite {
   test("disaster-recovery floor: a claim stale past 24x the window falls to first sight") {
     // observation memory is process-local; an EPHEMERAL claimant (fresh
     // JVM per batch run) never lives a full window, so without a floor a
-    // crashed claim would block auto-compaction forever. A marker whose
-    // mtime age exceeds 24x the window is taken over on FIRST sight —
-    // the one remaining clock comparison, at a bound (a full day at
-    // production settings) where wrongful takeover needs >24h skew.
+    // crashed claim would block auto-compaction forever. A claim whose
+    // sidecar's mtime age exceeds 24x the window is taken over on FIRST
+    // sight — the one remaining clock comparison, at a bound (a full day
+    // at production settings) where wrongful takeover needs >24h skew.
     val dir = Files.createTempDirectory("store_floor").toString
     def mk() = new TripletStore(spark, dir, autoCompactEvery = 0) {
       override protected def claimLivenessWindowMs: Long = 500L
@@ -1062,22 +1069,26 @@ class TripletStoreSpec extends AnyFunSuite {
     mk().merge(batch(Seq(("m1", "name", "b")), "2024-02-01 00:00:00"),
       ts("2024-02-01 00:00:00"))
     val marker = new java.io.File(dir, TripletStore.CompactionMarker)
-    // a crashed owner's claim, long dead
-    java.nio.file.Files.writeString(marker.toPath, "deadOwner1")
-    assert(marker.setLastModified(
-      System.currentTimeMillis() - 24L * 500 - 60000))
+    // a crashed owner's claim, long dead: its sidecar's last beat is old
+    def deadClaim(ageMs: Long): (TripletStore, String) = {
+      val owner = mk()
+      val token = owner.claimCompaction()
+      assert(new java.io.File(dir, TripletStore.CompactionSeqMarker + token)
+        .setLastModified(System.currentTimeMillis() - ageMs))
+      (owner, token)
+    }
+    deadClaim(24L * 500 + 60000)
     // a FRESH claimant instance (no observation memory) reclaims at once
     assert(mk().compact(keep = 1).nonEmpty,
       "an ancient crashed claim must not require a second observation")
     assert(!marker.exists())
-    // but a marker merely *somewhat* stale (inside the floor) still
+    // but a claim merely *somewhat* stale (inside the floor) still
     // needs the observed-frozen window — no first-sight takeover
-    java.nio.file.Files.writeString(marker.toPath, "deadOwner2")
-    assert(marker.setLastModified(System.currentTimeMillis() - 2000))
+    val (owner2, token2) = deadClaim(2000)
     intercept[TripletStore.ConcurrentCompactionException] {
       mk().compact(keep = 1)
     }
-    marker.delete()
+    owner2.releaseCompaction(token2)
     Scratch.rm(new java.io.File(dir))
   }
 
@@ -1193,12 +1204,10 @@ class TripletStoreSpec extends AnyFunSuite {
   }
 
   test("claim liveness is clock-free: skewed mtime survives, frozen seq is taken over") {
-    // r14 judged liveness by (claimant wall clock - marker mtime), where
-    // the mtime was stamped by the OWNER's clock: a claimant running
-    // >= TmpSweepAgeMs ahead — or a coarse-mtime filesystem — could take
-    // over a LIVE owner. r15 takes over only after the claimant itself
-    // observes an UNCHANGED (token, mtime, heartbeat sequence) across
-    // its own monotonic-clock window; no cross-host clock is compared.
+    // liveness is the owner's sidecar sequence, observed across the
+    // claimant's own monotonic-clock window; the marker's mtime is never
+    // read, so an mtime stamped hours in the past (clock skew, coarse
+    // mtime fidelity) cannot make a live owner look dead
     val dir = Files.createTempDirectory("store_hb").toString
     val windowMs = 600L
     val store = new TripletStore(spark, dir, autoCompactEvery = 0) {
@@ -1209,12 +1218,11 @@ class TripletStoreSpec extends AnyFunSuite {
     store.merge(batch(Seq(("m1", "name", "b")), "2024-02-01 00:00:00"),
       ts("2024-02-01 00:00:00"))
     val marker = new java.io.File(dir, TripletStore.CompactionMarker)
-    val seq = new java.io.File(dir, TripletStore.CompactionSeqMarker)
     val token = store.claimCompaction()
+    val seq = new java.io.File(dir, TripletStore.CompactionSeqMarker + token)
     val twoHoursPast = System.currentTimeMillis() - 2L * 60 * 60 * 1000
-    // owner ALIVE: heartbeat bumps the sequence sidecar every beat —
-    // while the test pins the marker mtime two hours in the past, the
-    // skew that took over a live owner under the r14 mtime-age rule
+    // owner ALIVE: heartbeat bumps the sequence sidecar every beat while
+    // the test pins the marker mtime two hours in the past
     val hb = store.startCompactionHeartbeat(token, intervalMs = 25)
     try {
       val deadline = System.nanoTime() + 3 * windowMs * 1000000L
@@ -1234,11 +1242,9 @@ class TripletStoreSpec extends AnyFunSuite {
       assert(java.nio.file.Files.readString(seq.toPath).trim
         .startsWith(token), "the heartbeat publishes <token> <seq>")
     } finally { hb.interrupt(); hb.join(2000) }
-    // owner genuinely dead (sequence frozen) — and its last mtime touch
-    // is RECENT, which under the r14 age rule would have blocked the
-    // takeover for a full TmpSweepAgeMs: observe-no-progress takes it
-    // over after one observed-frozen window, clock-free in BOTH
-    // directions
+    // owner genuinely dead (sequence frozen), its marker mtime RECENT:
+    // observe-no-progress takes it over after one observed-frozen
+    // window, whatever the marker's age says in either direction
     java.nio.file.Files.setLastModifiedTime(marker.toPath,
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
     intercept[TripletStore.ConcurrentCompactionException] {
@@ -1248,7 +1254,7 @@ class TripletStoreSpec extends AnyFunSuite {
     assert(store.compact(keep = 1).nonEmpty,
       "a frozen claim must be taken over after one observed window")
     assert(!marker.exists(), "a completed takeover pass releases the claim")
-    assert(!seq.exists(), "the released claim takes its sidecar with it")
+    assert(!seq.exists(), "the takeover removes the dead owner's sidecar")
     // a heartbeat observing a FOREIGN token stops signalling (ownership
     // lost): the new owner's liveness is its own to maintain
     java.nio.file.Files.writeString(marker.toPath, "newOwner1")
@@ -1256,10 +1262,61 @@ class TripletStoreSpec extends AnyFunSuite {
     assert(marker.setLastModified(past))
     assert(!store.heartbeatCompaction(token))
     assert(marker.lastModified() == past,
-      "a lost heartbeat must not refresh the new owner's marker")
+      "a lost heartbeat must not touch the new owner's marker")
     assert(!seq.exists(),
       "a lost heartbeat must not publish a sequence under a foreign claim")
     marker.delete()
+    Scratch.rm(new java.io.File(dir))
+  }
+
+  test("a claim's marker never stands without its sidecar; losers leave no file") {
+    // several claimants race real claim / heartbeat / release cycles
+    // while a watcher checks, on every marker it sees, that the owner's
+    // sidecar exists (the claim publishes the sidecar first, release and
+    // takeover remove it last) — re-reading the marker after a missing
+    // sidecar tells a release in flight from a violation
+    val dir = Files.createTempDirectory("store_sidecar").toString
+    val marker = new java.io.File(dir, TripletStore.CompactionMarker)
+    val violations = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val claims = new java.util.concurrent.atomic.AtomicInteger(0)
+    val losses = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var running = true
+    def read(f: java.io.File): Option[String] =
+      scala.util.Try(java.nio.file.Files.readString(f.toPath).trim).toOption
+    val watcher = new Thread(() => while (running) {
+      read(marker).foreach { t =>
+        if (!new java.io.File(dir, TripletStore.CompactionSeqMarker + t).exists() &&
+            read(marker).contains(t))
+          violations.add(s"marker $t stood without its sidecar")
+      }
+    })
+    // stores built up front: the session must not start inside the race
+    val stores = (0 until 3).map(_ => new TripletStore(spark, dir, autoCompactEvery = 0))
+    val claimants = stores.zipWithIndex.map { case (store, i) => new Thread(() => {
+      val rnd = new scala.util.Random(i)
+      while (running) {
+        try {
+          val token = store.claimCompaction()
+          claims.incrementAndGet()
+          val hb = store.startCompactionHeartbeat(token, intervalMs = 5)
+          Thread.sleep(5 + rnd.nextInt(20))
+          hb.interrupt(); hb.join()
+          store.releaseCompaction(token)
+        } catch {
+          case _: TripletStore.ConcurrentCompactionException =>
+            losses.incrementAndGet()
+        }
+      }
+    })}
+    (watcher +: claimants).foreach(_.start())
+    Thread.sleep(1500)
+    running = false
+    (watcher +: claimants).foreach(_.join(10000))
+    assert(violations.isEmpty, violations.toArray.mkString("; "))
+    assert(claims.get() >= 3 && losses.get() >= 1,
+      s"${claims.get()} claims, ${losses.get()} losses: the race never ran")
+    assert(new java.io.File(dir).list().isEmpty,
+      s"left behind: ${new java.io.File(dir).list().mkString(", ")}")
     Scratch.rm(new java.io.File(dir))
   }
 

@@ -112,7 +112,7 @@ class MediaDedupIndexSpec extends AnyFunSuite {
     direct.ingest(rows1.toDS())
     direct.ingest(rows2.toDS())
     // streaming: the same two batches as single-file micro-batches
-    // through mediaIntake (the StreamSustainProbe feed pattern)
+    // through mediaIntake (the feed pattern of SCALE.md § Streaming)
     val watch = Files.createTempDirectory("media_watch")
     val streamDir = Files.createTempDirectory("media_stream").toString
     val schema = rows1.toDS().toDF().schema
