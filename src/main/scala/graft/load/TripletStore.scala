@@ -2,7 +2,7 @@ package graft.load
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -487,8 +487,8 @@ class TripletStore(spark: SparkSession, path: String,
     * the subject-sorted files prune row groups and whole files WITHIN a
     * touched bucket — the semi-join can only drop rows after reading
     * them. The two are exclusive; `subjectLits` must be the COMPLETE
-    * subject set (the deprecation arm treats every surviving open row
-    * as touched). `bucketsFor` is the scan-side twin (see [[levelsAt]]):
+    * subject set (merge deprecates every surviving open row the batch
+    * does not match). `bucketsFor` is the scan-side twin (see [[levelsAt]]):
     * the subjects' bucket ids — under each level's own self-described
     * modulus — prune level FILES at planning time —
     * together the merge reads O(touched partitions ∩ matching row
@@ -781,62 +781,36 @@ class TripletStore(spark: SparkSession, path: String,
           bucketsFor = Some(touchedFn))
       }
 
-    // The MERGE join executes exactly ONCE (eager checkpoint); extended /
-    // fresh / deprecation / stats / delta below all read the
-    // materialized result instead of re-running the join lineage — at
-    // 100 TB the previous shape re-scanned the ranges table 4x per batch.
-    val j = Checkpoints.ck(open.as("o").join(inc.as("i"),
+    // The MERGE join runs exactly once, in its eager checkpoint: the
+    // delta write must not re-run it, and commitLevel needs the exact
+    // delta row count BEFORE the write (it decides bucketing and file
+    // sizing). The per-kind counts are observed on that same job.
+    val isFresh = col("o.tripletHash").isNull
+    val isGone = col("i.tripletHash").isNull
+    val (j, counts) = ckObserved(open.as("o").join(inc.as("i"),
       col("o.tripletHash") === col("i.tripletHash") &&
-        col("o.infoHash") === col("i.infoHash"), "full_outer"))
+        col("o.infoHash") === col("i.infoHash"), "full_outer"),
+      count(when(isFresh, 1)).as("nNew"),
+      count(when(!isFresh && !isGone, 1)).as("nExtended"),
+      count(when(isGone, 1)).as("nDeprecated"))
+    val stats = MergeStats(counts("nNew"), counts("nExtended"), counts("nDeprecated"))
 
-    val extended = j.filter(col("o.tripletHash").isNotNull && col("i.tripletHash").isNotNull)
-      .select(
-        col("o.tripletHash").as("tripletHash"), col("o.subject").as("subject"),
-        col("o.predicate").as("predicate"), col("o.obj").as("obj"),
-        col("o.objKind").as("objKind"), col("o.datatype").as("datatype"),
-        col("o.infoHash").as("infoHash"),
-        col("o.extractionMethod").as("extractionMethod"),
-        col("o.confidence").as("confidence"), col("o.useStart").as("useStart"),
-        greatest(col("o.useEnd"), col("i.extractionTime")).as("useEnd"),
-        lit(false).as("deprecated"))
-
-    val fresh = j.filter(col("o.tripletHash").isNull)
-      .select(
-        col("i.tripletHash").as("tripletHash"), col("i.subject").as("subject"),
-        col("i.predicate").as("predicate"), col("i.obj").as("obj"),
-        col("i.objKind").as("objKind"), col("i.datatype").as("datatype"),
-        col("i.infoHash").as("infoHash"),
-        col("i.extractionMethod").as("extractionMethod"),
-        col("i.confidence").as("confidence"),
-        col("i.extractionTime").as("useStart"),
-        col("i.extractionTime").as("useEnd"), lit(false).as("deprecated"))
-
-    // Every open row in j has a touched subject (the reconstruction was
-    // subject-restricted), so an unmatched one IS a deprecation.
-    val toDeprecate = j.filter(col("i.tripletHash").isNull)
-      .select(col("o.*"))
-      .withColumn("deprecated", lit(true))
-      .withColumn("useEnd", lit(now))
-      .select(rangeCols: _*)
-
-    // The delta holds ONLY the changed rows. Open ranges of untouched
-    // subjects and the closed history are represented by the levels
-    // already on disk — an unchanged row is never rewritten.
-    val delta = extended.select(rangeCols: _*)
-      .unionByName(fresh.select(rangeCols: _*))
-      .unionByName(toDeprecate)
-
-    // One stats job over the checkpointed join instead of three counts
-    // that each re-ran the full merge lineage.
-    val kinds = fresh.select(lit("new").as("k"))
-      .unionByName(extended.select(lit("extended").as("k")))
-      .unionByName(toDeprecate.select(lit("deprecated").as("k")))
-      .groupBy("k").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val stats = MergeStats(
-      nNew = kinds.getOrElse("new", 0L),
-      nExtended = kinds.getOrElse("extended", 0L),
-      nDeprecated = kinds.getOrElse("deprecated", 0L))
+    // The delta holds ONLY the changed rows, one per join row: fresh
+    // (stored side null) takes the batch's fields, extended (both sides)
+    // and deprecated (batch side null — every open row in j has a touched
+    // subject, the reconstruction being subject-restricted) keep the
+    // stored ones. Sides are picked by which join key is null, never by
+    // coalescing values: a null field is legal. Open ranges of untouched
+    // subjects and the closed history stay in the levels on disk.
+    val t = col("i.extractionTime")
+    val delta = j.select(rangeSchema.fieldNames.toSeq.map {
+      case "useStart" => when(isFresh, t).otherwise(col("o.useStart")).as("useStart")
+      // `now` is null when StreamingLoad merges an all-null-clock batch
+      case "useEnd" => when(isFresh, t).when(isGone, lit(now).cast("timestamp"))
+        .otherwise(greatest(col("o.useEnd"), t)).as("useEnd")
+      case "deprecated" => isGone.as("deprecated")
+      case c => when(isFresh, col(s"i.$c")).otherwise(col(s"o.$c")).as(c)
+    }: _*)
 
     val v = v0 + 1
     // markers BEFORE the delta commit: written after, a crash between
@@ -863,8 +837,8 @@ class TripletStore(spark: SparkSession, path: String,
     // cannot exist.
     // identity-clustered delta files, subject-bucketed when lake-sized
     // (bucketed dirs let future merges prune their level reads to the
-    // touched buckets); the stats job already counted the delta rows, so
-    // file sizing is free
+    // touched buckets), sized by the row count the join's checkpoint
+    // observed
     commitLevel(delta.withColumn("v", lit(v)),
       stats.nNew + stats.nExtended + stats.nDeprecated, s"v$v", s"v=$v")
     // Post-commit mask guard: the rename succeeding is NOT sufficient in
@@ -951,6 +925,19 @@ class TripletStore(spark: SparkSession, path: String,
       }
     }
     out.get
+  }
+
+  /** Eagerly checkpoint `df` ([[Checkpoints.ck]]) and return the named
+    * `counts` observed on the checkpoint's own job (`Dataset.observe`):
+    * a write path learns its row counts without an action of its own.
+    * The checkpoint runs the observed frame's own query execution, so
+    * the metrics are read from it synchronously — no `Observation`,
+    * whose session listener would wait on the listener bus. */
+  private def ckObserved(df: DataFrame, counts: Column*): (DataFrame, Map[String, Long]) = {
+    val observed = df.observe("counts", counts.head, counts.tail: _*)
+    val c = Checkpoints.ck(observed)
+    val row = observed.queryExecution.observedMetrics("counts")
+    (c, row.schema.fieldNames.map(n => n -> row.getAs[Long](n)).toMap)
   }
 
   /** Range-partition file count for `rows` at `targetRowsPerFile`. */
@@ -1261,8 +1248,8 @@ class TripletStore(spark: SparkSession, path: String,
       // superseded dirs remain to delete.
       var repin: Option[Int] = None
       if (!baseVersions.contains(cut)) {
-        val snap = Checkpoints.ck(reconstruct(cut, openOnly = false)
-          .withColumn("v", lit(cut)))
+        val (snap, counts) = ckObserved(reconstruct(cut, openOnly = false)
+          .withColumn("v", lit(cut)), count(lit(1)).as("rows"))
         // rename-committed like every other landing in this store: two
         // compaction owners racing the same cut collide loudly instead
         // of interleaving Overwrite writes into one torn-but-committed
@@ -1274,9 +1261,8 @@ class TripletStore(spark: SparkSession, path: String,
         // (single-owner, rewrites the base anyway): the base buckets by
         // the re-derived N, self-described; the store marker moves only
         // after the old levels drop ([[repinCandidate]]).
-        val rows = snap.count()
-        repin = repinCandidate(rows)
-        commitLevel(snap, rows, s"base$cut", s"base=$cut", forceN = repin)
+        repin = repinCandidate(counts("rows"))
+        commitLevel(snap, counts("rows"), s"base$cut", s"base=$cut", forceN = repin)
       }
       // deletion phase gate: the base build above may have outlived even
       // the heartbeat's liveness (a long JVM pause) and been taken over —
@@ -1391,11 +1377,11 @@ class TripletStore(spark: SparkSession, path: String,
       // must fold into the base — the deletion below drops every level
       // under nv, so a base built from the stale entry state would
       // silently lose that merge
-      val snap = Checkpoints.ck(reconstruct(nv - 1, openOnly = false)
+      val (snap, counts) = ckObserved(reconstruct(nv - 1, openOnly = false)
         .filter(!col("deprecated") ||
           col("useEnd") >= lit(new Timestamp(newHorizon)))
-        .withColumn("v", lit(nv)))
-      val rows = snap.count()
+        .withColumn("v", lit(nv)), count(lit(1)).as("rows"))
+      val rows = counts("rows")
       // retention is a keep-everything-in-one-base pass, so it is a
       // re-pin moment exactly like compact(keep)'s — same guards, same
       // marker-moves-last ordering
@@ -1427,9 +1413,9 @@ class TripletStore(spark: SparkSession, path: String,
     * (retired), compared on (subject, predicate, obj). Each snapshot is
     * one reconstruction (one window exchange); the comparison is ONE
     * aggregate over both, keyed by the triple, instead of a distinct per
-    * snapshot plus an anti-join. A triple with a null field never
-    * matches across snapshots — the equality of the anti-join this
-    * replaces — so it is reported on every side it appears. */
+    * snapshot plus an anti-join. The grouping is null-safe: a triple
+    * with a null field (a legal null subject) held by both snapshots is
+    * neither added nor retired. */
   def delta(fromV: Int, toV: Int): (DataFrame, DataFrame) = {
     val spo = Seq("subject", "predicate", "obj").map(col)
     def side(v: Int, tag: String): DataFrame =
@@ -1437,9 +1423,8 @@ class TripletStore(spark: SparkSession, path: String,
     val sides = side(fromV, "a").unionByName(side(toV, "b"))
       .groupBy(spo: _*)
       .agg(max(col("side") === "a").as("inA"), max(col("side") === "b").as("inB"))
-    val unmatched = spo.map(_.isNull).reduce(_ || _)
-    (sides.filter(col("inB") && (!col("inA") || unmatched)).select(spo: _*),
-      sides.filter(col("inA") && (!col("inB") || unmatched)).select(spo: _*))
+    (sides.filter(col("inB") && !col("inA")).select(spo: _*),
+      sides.filter(col("inA") && !col("inB")).select(spo: _*))
   }
 }
 

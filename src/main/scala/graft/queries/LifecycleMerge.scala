@@ -7,14 +7,15 @@ import org.apache.spark.sql.functions._
 
 import graft.load.{Scratch, TripletStore}
 
-/** The shared load half of the two composed lifecycle rows
-  * (q_etl_lifecycle / q_openml_lifecycle): two extraction passes merged
-  * as versions 0 and 1 of a scratch [[TripletStore]], output = the V8
-  * current graph with `start_ms` separating extended from fresh ranges
-  * and the A9 distinct-subject + deprecated-range audit counts. One
-  * implementation so a fix to the merge mechanics, the
-  * checkpoint-before-scratch-removal discipline, or the audit-count
-  * semantics cannot silently diverge between the two entry points. */
+/** The shared load half of the three composed lifecycle rows
+  * (q_etl_lifecycle / q_openml_lifecycle / q_ai4life_lifecycle): two
+  * extraction passes merged as versions 0 and 1 of a scratch
+  * [[TripletStore]], output = the V8 current graph with `start_ms`
+  * separating extended from fresh ranges and the A9 distinct-subject +
+  * deprecated-range audit counts. One implementation so a fix to the
+  * merge mechanics, the checkpoint-before-scratch-removal discipline, or
+  * the audit-count semantics cannot silently diverge between the three
+  * entry points. */
 private[queries] object LifecycleMerge {
 
   // Logical clock (epoch seconds, UTC): load-1 extraction base, load-2

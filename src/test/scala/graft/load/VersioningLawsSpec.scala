@@ -194,9 +194,12 @@ class VersioningLawsSpec extends AnyFunSuite {
       for (a <- store.oldestRetainedVersion to v; b <- store.oldestRetainedVersion to v) {
         val ra = reference(a, openOnly = true).select(spo.map(col): _*).distinct()
         val rb = reference(b, openOnly = true).select(spo.map(col): _*).distinct()
+        // null-safe: the null-subject triple is one triple in both snapshots
+        def minus(x: DataFrame, y: DataFrame) = x.as("x").join(y.as("y"),
+          spo.map(c => col(s"x.$c") <=> col(s"y.$c")).reduce(_ && _), "left_anti")
         val (added, retired) = store.delta(a, b)
-        assert(bag(added) == bag(rb.join(ra, spo, "left_anti")), s"delta($a, $b) added $what")
-        assert(bag(retired) == bag(ra.join(rb, spo, "left_anti")), s"delta($a, $b) retired $what")
+        assert(bag(added) == bag(minus(rb, ra)), s"delta($a, $b) added $what")
+        assert(bag(retired) == bag(minus(ra, rb)), s"delta($a, $b) retired $what")
       }
       // the fixture reaches every case it is meant to
       val r = store.ranges
